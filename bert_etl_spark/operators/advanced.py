@@ -27,7 +27,10 @@ from pyspark.sql import functions as F
 
 from bert_etl_spark.functions.deterministic import davg, dsum, sql_davg, sql_dsum
 from bert_etl_spark.functions.release import release
-from bert_etl_spark.operators.index_lifecycle import read_with_cached_schema
+from bert_etl_spark.operators.index_lifecycle import (
+    IndexFamily,
+    read_with_cached_schema,
+)
 from bert_etl_spark.operators.dedup import (
     COSINE_THRESHOLD,
     JACCARD_THRESHOLD,
@@ -724,150 +727,76 @@ def _edge_bucket(col):
     return F.pmod(F.xxhash64(c), F.lit(GRAPH_EDGE_BUCKETS)).cast("int")
 
 
-def _edges_assign_plan(li: DataFrame) -> DataFrame:
-    """The durable edge rows: (u, v, pkey, ebkt). pkey = 'u|v' is the
-    ingest-idempotence key (an edge re-offered by a replayed batch
+def _edge_rows(edges: DataFrame) -> DataFrame:
+    """Edges (u, v) as durable edge rows (u, v, pkey, ebkt). pkey = 'u|v'
+    is the ingest-idempotence key (an edge re-offered by a replayed batch
     collapses); ebkt is a pure function of u, so a re-delivered edge
     lands in its standing row's partition (the touched-partition
     anti-join's losslessness condition). The hash INPUT TYPE is pinned:
-    u/v cast to bigint before bucketing, exactly as graph_edges_ingest
-    casts its batch — xxhash64 is type-sensitive (an int and a bigint of
-    the same value hash differently), so without the cast a non-bigint
-    source key column would land build rows in int-hash buckets while
-    graph_edges_delete derives the long-hash bucket and trusts it
-    (trusted_parts=True), silently tombstoning nothing (round-13 advice,
-    the 'medium' item)."""
+    u/v cast to bigint before bucketing — xxhash64 is type-sensitive (an
+    int and a bigint of the same value hash differently), so without the
+    cast a non-bigint source key column would land rows in int-hash
+    buckets while a bare-pkey delete derives the long-hash bucket and
+    trusts it, silently tombstoning nothing (round-13 advice, the
+    'medium' item)."""
     return (
-        _copurchase_edge_plan(li)
-        .select(
+        edges.select(
             F.col("u").cast("bigint").alias("u"),
             F.col("v").cast("bigint").alias("v"),
         )
         .withColumn("pkey", F.concat_ws("|", "u", "v"))
         .withColumn("ebkt", _edge_bucket("u"))
     )
+
+
+def _edges_assign_plan(li: DataFrame) -> DataFrame:
+    """The build's durable edge rows over a (l_orderkey, l_partkey)
+    input."""
+    return _edge_rows(_copurchase_edge_plan(li))
+
+
+def _drop_edge_memo(spark: SparkSession, edge_dir: str) -> None:
+    # the session memo of the at-rest read goes stale under maintenance
+    from bert_etl_spark.operators.registry import checkpoint_invalidate
+
+    checkpoint_invalidate(spark, "copurchase_edges_at_rest", edge_dir)
+
+
+# The edge table through the generic verbs. ebkt is a pure function of
+# the key itself (xxhash64 of pkey's u prefix against the
+# marker-validated modulus), so a bare-pkey delete feed gets its
+# partition DERIVED, not looked up — every edge delete is O(touched
+# buckets), and the derived values are trusted by construction (a key
+# absent from its one possible bucket is provably absent from the
+# table; no cross-check scan). A feed carrying its own ebkt column keeps
+# the untrusted cross-checked path.
+GRAPH_EDGE_FAMILY = IndexFamily(
+    name="edge table",
+    unit="buckets",
+    marker=_EDGE_MARKER,
+    layout=GRAPH_EDGE_BUCKETS,
+    part_col="ebkt",
+    part_cap=GRAPH_EDGE_BUCKETS,
+    assign=lambda spark, edges, edge_dir: _edge_rows(edges),
+    key="pkey",
+    key_part=lambda: _edge_bucket(F.split("pkey", "\\|")[0].cast("long")),
+    before=_drop_edge_memo,
+)
 
 
 def graph_edges_build_or_open(
     spark: SparkSession, sf_dir: str, edge_dir: str
 ) -> None:
-    """Ensure a standing edge table at ``edge_dir`` (shared lifecycle:
-    open recovers/refuses, build is sentinel-guarded)."""
-    from bert_etl_spark.operators.index_lifecycle import build_index, open_index
-
-    marker = open_index(spark, edge_dir, _EDGE_MARKER, "ebkt")
-    if marker is not None and marker != GRAPH_EDGE_BUCKETS:
-        raise ValueError(
-            f"edge table at {edge_dir} was built with {marker} buckets "
-            f"but this build hashes into {GRAPH_EDGE_BUCKETS} — the bucket "
-            "modulus is a persistent layout property; point the conf at a "
-            "fresh dir or delete the stale table"
-        )
-    if marker is not None:
-        return
-    n_parts = int(spark.conf.get("spark.sql.shuffle.partitions", "32") or "32")
-    build_index(
+    GRAPH_EDGE_FAMILY.open_or_build(
         spark,
         edge_dir,
-        _EDGE_MARKER,
-        GRAPH_EDGE_BUCKETS,
-        _edges_assign_plan(_lineitem_for_edges(spark, sf_dir)),
-        "ebkt",
-        min(n_parts, GRAPH_EDGE_BUCKETS),
+        lambda: _edges_assign_plan(_lineitem_for_edges(spark, sf_dir)),
     )
 
 
-def graph_edges_ingest(spark: SparkSession, batch: DataFrame, edge_dir: str) -> int:
-    """Idempotent append of new edges (u, v) into the standing table —
-    the shared O(touched-partitions) ingest verb (an edge feed from a new
-    lineitem delta, an external graph mutation stream)."""
-    from bert_etl_spark.functions.markers import read_int_marker
-    from bert_etl_spark.operators.index_lifecycle import ingest_rows
-
-    if read_int_marker(spark, f"{edge_dir}/{_EDGE_MARKER}") != GRAPH_EDGE_BUCKETS:
-        raise ValueError(
-            f"no standing edge table at {edge_dir} (or a drifted layout) "
-            "— build it first (graph_edges_build_or_open)"
-        )
-    assigned = (
-        batch.select(
-            F.col("u").cast("bigint").alias("u"),
-            F.col("v").cast("bigint").alias("v"),
-        )
-        .withColumn("pkey", F.concat_ws("|", "u", "v"))
-        .withColumn("ebkt", _edge_bucket("u"))
-    )
-    from bert_etl_spark.operators.registry import checkpoint_invalidate
-
-    checkpoint_invalidate(spark, "copurchase_edges_at_rest", edge_dir)
-    n_parts = int(spark.conf.get("spark.sql.shuffle.partitions", "32") or "32")
-    return ingest_rows(
-        spark,
-        edge_dir,
-        _EDGE_MARKER,
-        GRAPH_EDGE_BUCKETS,
-        assigned,
-        "ebkt",
-        min(n_parts, GRAPH_EDGE_BUCKETS),
-        key="pkey",
-    )
-
-
-def graph_edges_delete(spark: SparkSession, keys: DataFrame, edge_dir: str) -> int:
-    """Tombstone-delete edges by pkey ('u|v') — masked from every read
-    immediately, applied physically at the next compact. ebkt is a pure
-    function of the key itself (xxhash64 of pkey's u prefix against the
-    marker-validated modulus), so a bare-pkey feed gets its partition
-    DERIVED, not looked up — every edge delete is O(touched buckets),
-    and the derived values are trusted by construction (a key absent
-    from its one possible bucket is provably absent from the index; no
-    cross-check scan needed). A feed carrying its own ebkt column keeps
-    the untrusted cross-checked path."""
-    from bert_etl_spark.operators.index_lifecycle import delete_keys
-
-    from bert_etl_spark.operators.registry import checkpoint_invalidate
-
-    checkpoint_invalidate(spark, "copurchase_edges_at_rest", edge_dir)
-    derived = "ebkt" not in keys.columns
-    if derived:
-        keys = keys.withColumn(
-            "ebkt",
-            _edge_bucket(F.split("pkey", "\\|")[0].cast("long")),
-        )
-    return delete_keys(
-        spark,
-        edge_dir,
-        _EDGE_MARKER,
-        GRAPH_EDGE_BUCKETS,
-        keys,
-        trusted_parts=derived,
-        key="pkey",
-        part_col="ebkt",
-    )
-
-
-def graph_edges_compact(spark: SparkSession, edge_dir: str) -> int:
-    """Compact the grown edge table (applies tombstones) through the
-    shared crash-safe protocol."""
-    from bert_etl_spark.functions.markers import read_int_marker
-    from bert_etl_spark.operators.index_lifecycle import compact_index
-
-    if read_int_marker(spark, f"{edge_dir}/{_EDGE_MARKER}") is None:
-        raise ValueError(
-            f"no standing edge table at {edge_dir} — nothing to compact"
-        )
-    from bert_etl_spark.operators.registry import checkpoint_invalidate
-
-    checkpoint_invalidate(spark, "copurchase_edges_at_rest", edge_dir)
-    n_parts = int(spark.conf.get("spark.sql.shuffle.partitions", "32") or "32")
-    return compact_index(
-        spark,
-        edge_dir,
-        _EDGE_MARKER,
-        "ebkt",
-        min(n_parts, GRAPH_EDGE_BUCKETS),
-        key="pkey",
-    )
+graph_edges_ingest = GRAPH_EDGE_FAMILY.ingest
+graph_edges_delete = GRAPH_EDGE_FAMILY.delete
+graph_edges_compact = GRAPH_EDGE_FAMILY.compact
 
 
 def _edges_at_rest_plan(spark: SparkSession, edge_dir: str) -> DataFrame:

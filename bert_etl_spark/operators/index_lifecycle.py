@@ -11,6 +11,21 @@ content key), tombstone deletes, and compaction back to one file per
 partition. This module is that contract written once, so the families
 cannot drift.
 
+Each family is one frozen ``IndexFamily`` descriptor declared next to
+its operators, holding only what differs: noun and layout unit (for
+messages), marker file and layout constant, partition column and write
+cap, key (plus a posting-level ingest key), keymap use, ``multi_rows``,
+the ``assign`` that turns an arrival batch into index rows against the
+family's frozen artifacts, a partition derived from the key where one
+exists (the edge table), and one ``before`` hook. Its verbs —
+``open``, ``open_or_build``, ``ingest``, ``upsert``, ``upsert_delete``,
+``delete``, ``compact``, ``stream``, ``delete_stream`` — are the same
+code for every family: each recovers the dir through ``open_index`` and
+refuses a missing marker or one that differs from the family's
+constant, then runs the primitives below. The family modules' public
+verb names (``ivf_index_ingest``, ``textidx_compact``, ...) are aliases
+of these methods.
+
 Crash-safety protocol (round-10 advice, the 'high' item): the index stops
 being a pure function of (corpus, constants) the moment ingest exists —
 ingested documents need not be derivable from the corpus, so "marker-less
@@ -27,7 +42,8 @@ dir => rebuild from corpus" would silently DROP them after a crash. Instead:
   re-stamps the marker and cleans up. From the sentinel onward a crash at ANY
   step is recoverable from the already-written tmp table: the swap is
   per-partition delete+rename, so re-running it finishes whatever the crash
-  left half-done (``finish_compaction_swap``). Readers recover on open.
+  left half-done (``finish_compaction_swap``). Readers and every family
+  verb recover on open.
 - A marker-less dir that holds partition data but NEITHER sentinel has no
   recovery record (manual marker deletion, foreign data) — ``open_index``
   REFUSES rather than overwriting possibly-ingested documents.
@@ -39,8 +55,8 @@ ingest appends into). Probes/readers are safe concurrent with ingest
 (parquet readers list files once) but not with a compact's swap window.
 The reference's analog runs dataset maintenance through one queue worker
 (/root/reference/bert/etl/__init__.py:86-164); on Spark, schedule compaction
-in the ingest job's own trigger loop (every family's ``*_stream`` wrapper
-takes ``compact_every=N`` and runs its compact verb inside the foreachBatch
+in the ingest job's own trigger loop (``IndexFamily.stream`` takes
+``compact_every=N`` and runs the compact verb inside the foreachBatch
 lane on every Nth epoch — single-writer by construction; a crash mid-compact
 is the recoverable sentinel window and the replayed epoch re-ingests
 idempotently) or behind an external lock. Ingest
@@ -50,7 +66,10 @@ re-validates the marker immediately before its append as a cheap tripwire
 
 from __future__ import annotations
 
-from pyspark.sql import DataFrame, SparkSession
+from dataclasses import dataclass
+from typing import Callable
+
+from pyspark.sql import Column, DataFrame, SparkSession
 
 from bert_etl_spark.functions.release import release
 
@@ -636,7 +655,7 @@ def upsert_delete_rows(
     (their partitions join the touched set via the same slim scan), so
     no tombstone is recorded for them — physical removal inside a
     sentinel-committed rewrite is strictly stronger masking than the
-    tombstone the sequential path wrote, and the next compact would
+    tombstone delete_keys would write, and the next compact would
     have rewritten those partitions anyway. ``n_deleted`` counts drop
     keys physically present and not already tombstoned — the number
     delete_keys would have returned. Tombstones already standing for
@@ -750,8 +769,11 @@ def _upsert_delete_impl(
             # delete_keys' contract (physically present AND not already
             # tombstoned) without a second job.
             drop = drop_keys.select(key).dropDuplicates([key])
+            bkeys = batch.select(key)
+            if multi_rows:  # one key per row-set, not per row
+                bkeys = bkeys.dropDuplicates([key])
             allkeys = (
-                batch.select(key)
+                bkeys
                 .withColumn("_del", F.lit(False))
                 .unionByName(drop.withColumn("_del", F.lit(True)))
             )
@@ -790,8 +812,8 @@ def _upsert_delete_impl(
             n_deleted = int(lrow["n_del"])
             old_parts = list(lrow["parts"])
             if n_batch == 0 and int(lrow["n_del_any"]) == 0:
-                # all-delete sync whose keys are nowhere physical: the
-                # sequential path's no-op (absent keys record nothing)
+                # all-delete sync whose keys are nowhere physical: a
+                # no-op, as in delete_keys (absent keys record nothing)
                 return (0, 0, 0)
             exclkeys = allkeys.select(key)
         touched = sorted(set(new_parts) | set(old_parts))
@@ -1040,8 +1062,9 @@ def pending_tombstone_bytes(spark: SparkSession, index_dir: str) -> int:
     """Bytes of pending (uncompacted) tombstone files — the same number
     apply_tombstones' overdue warning and index_file_stats report, as a
     cheap standalone probe: one driver-side FS listing, O(tombstone
-    files), never a Spark job. This is the signal the ``*_stream``
-    wrappers' ``compact_when_tombstones_over=`` consults per epoch —
+    files), never a Spark job. This is the signal
+    ``IndexFamily.stream``'s ``compact_when_tombstones_over=`` consults
+    per epoch —
     compaction triggered by measured masking debt instead of the blind
     ``compact_every=N`` epoch cadence (round-12 'next round' item #7)."""
     fs, p = _fs(spark, index_dir)
@@ -1119,7 +1142,7 @@ def apply_tombstones(
         warnings.warn(
             f"index {index_dir} carries {pending} bytes of pending "
             f"tombstones (> {limit}) — every probe broadcasts them; "
-            "compaction (compact_index / the family's *_compact wrapper) "
+            "compaction (compact_index / the family's compact verb) "
             "applies and clears them and is overdue",
             RuntimeWarning,
             stacklevel=2,
@@ -1447,8 +1470,11 @@ def physical_pruned_scan(
     ledger_probe idiom — listing and scan are O(requested partitions),
     not O(index)) and keeps the predicate as a real filter so it shows as
     PartitionFilters and a mis-enumerated path can never leak rows.
-    Returns None when there is nothing to scan (no values, or none of the
-    requested dirs exist yet). ``merge_schema=True`` unions the footer
+    Returns None when there is nothing to scan: no values, or none of the
+    requested dirs holds a data file yet. A dir with no data file (never
+    written, or staged EMPTY by an upsert swap that drained it) is left
+    out of the scan — a read over only empty dirs has no footer to
+    resolve a schema from. ``merge_schema=True`` unions the footer
     schemas of the scanned files (parquet mergeSchema) — required by
     tables whose appended batches may GROW the payload schema (the CDC op
     log), where single-footer resolution would silently drop a column
@@ -1462,20 +1488,29 @@ def physical_pruned_scan(
 
     lp = local_path(index_dir)
     if lp is not None:
-        # local fast path: one os.path.isdir per requested value —
+        # local fast path: one directory listing per requested value —
         # microseconds, vs a JVM glob round trip per verb call
-        import os
+        from bert_etl_spark.functions.fsfast import list_data_files
 
         dirs = [
-            f"{index_dir}/{part_col}={v}"
-            for v in sorted(set(values))
-            if os.path.isdir(os.path.join(lp, f"{part_col}={v}"))
+            d
+            for d in (f"{index_dir}/{part_col}={v}" for v in sorted(set(values)))
+            if list_data_files(d)
         ]
     else:
+        # one glob over the FILES under the requested dirs; a dir is
+        # scanned when it holds at least one data file
         fs, p = _fs(spark, index_dir)
         pat = "{" + ",".join(str(v) for v in sorted(set(values))) + "}"
-        st = fs.globStatus(p(f"{index_dir}/{part_col}={pat}"))
-        dirs = [] if st is None else [s.getPath().toString() for s in st]
+        st = fs.globStatus(p(f"{index_dir}/{part_col}={pat}/*"))
+        dirs = sorted(
+            {
+                s.getPath().getParent().toString()
+                for s in (st or [])
+                if s.isFile()
+                and not s.getPath().getName().startswith(("_", "."))
+            }
+        )
     if not dirs:
         return None
     if merge_schema:  # CDC op log: schema GROWS by design — no memo
@@ -1612,4 +1647,265 @@ def index_file_stats(
             f"{part_col} string, n_files int, n_rows bigint, "
             "n_tombstones bigint, tombstone_bytes bigint"
         ),
+    )
+
+
+def shuffle_parts(spark: SparkSession, cap: int | None = None) -> int:
+    """``spark.sql.shuffle.partitions`` as an int (32 when unset or
+    empty), capped at ``cap`` — the write-task count of a maintenance
+    verb with AQE coalescing off (bucket_layout)."""
+    n = int(spark.conf.get("spark.sql.shuffle.partitions", "32") or "32")
+    return n if cap is None else min(n, cap)
+
+
+@dataclass(frozen=True)
+class IndexFamily:
+    """One durable index family: only what its verbs differ by. Every
+    family runs the SAME verb set below over the shared primitives, so
+    recovery, layout validation and the refusal messages cannot drift
+    between families.
+
+    - ``name`` / ``unit``: the table's noun ("IVF index") and the layout
+      unit its constant counts ("centroids"), for messages;
+    - ``marker`` / ``layout``: the layout marker file and the constant
+      it must carry;
+    - ``part_col`` / ``part_cap``: the partition column and the cap on
+      maintenance write tasks (the number of partition values);
+    - ``key``: the row identity upserts replace and deletes tombstone;
+      ``pkey``: ingest's dedup key when it differs (a text posting is
+      (token, doc), its delete/upsert key the doc);
+    - ``keymap``: bare-key deletes may go through the key→partition map
+      and writes record into it (when ``spark.bert_etl.index.keymap``);
+    - ``multi_rows``: one key owns MANY rows across partitions (a
+      document's postings) — upserts replace row-sets, and a delete can
+      never be located by a single partition value;
+    - ``assign(spark, batch, index_dir)``: an arrival batch as index rows,
+      assigned with the index's own frozen artifacts;
+    - ``key_part()``: the partition as a pure function of the key (the
+      edge table's ebkt from pkey) — bare-key deletes then derive it and
+      trust it instead of scanning;
+    - ``before(spark, index_dir)``: run first by every verb (the text
+      index's legacy-layout refusal, the edge table's memo drop)."""
+
+    name: str
+    unit: str
+    marker: str
+    layout: int
+    part_col: str
+    part_cap: int
+    assign: Callable[[SparkSession, DataFrame, str], DataFrame]
+    key: str = "vec_id"
+    pkey: str | None = None
+    keymap: bool = False
+    multi_rows: bool = False
+    key_part: Callable[[], Column] | None = None
+    before: Callable[[SparkSession, str], None] | None = None
+
+    def _parts(self, spark: SparkSession) -> int:
+        return shuffle_parts(spark, self.part_cap)
+
+    def _keymap_on(self, spark: SparkSession) -> bool:
+        return self.keymap and keymap_enabled(spark)
+
+    def open(self, spark: SparkSession, index_dir: str) -> int:
+        """Recover the index (open_index) and validate its stamped layout
+        against this family's constant; refuse a dir with no index.
+        Returns the layout."""
+        marker = self._open(spark, index_dir)
+        if marker is None:
+            raise ValueError(
+                f"no standing {self.name} at {index_dir} — build it first"
+            )
+        return marker
+
+    def _open(self, spark: SparkSession, index_dir: str) -> int | None:
+        """open, but None when the dir is verified buildable."""
+        if self.before is not None:
+            self.before(spark, index_dir)
+        marker = open_index(spark, index_dir, self.marker, self.part_col)
+        if marker is not None and marker != self.layout:
+            raise ValueError(
+                f"{self.name} at {index_dir} was built with {marker} "
+                f"{self.unit} but this build uses {self.layout} — the "
+                f"{self.unit} count is a persistent layout property; "
+                "rebuild or migrate the index in place, or point at a "
+                "fresh dir"
+            )
+        return marker
+
+    def open_or_build(
+        self,
+        spark: SparkSession,
+        index_dir: str,
+        plan: Callable[[], DataFrame],
+        finalize=None,
+    ) -> None:
+        """Open the standing index, or build it from ``plan()`` (called
+        only when a build is needed) with build_index's ``finalize``."""
+        if self._open(spark, index_dir) is not None:
+            return
+        build_index(
+            spark,
+            index_dir,
+            self.marker,
+            self.layout,
+            plan(),
+            self.part_col,
+            self._parts(spark),
+            finalize=finalize,
+            keymap_key=self.key if self._keymap_on(spark) else None,
+        )
+
+    def ingest(self, spark: SparkSession, batch: DataFrame, index_dir: str) -> int:
+        """Idempotent append of ``batch`` (ingest_rows). Returns rows
+        ingested."""
+        self.open(spark, index_dir)
+        return ingest_rows(
+            spark,
+            index_dir,
+            self.marker,
+            self.layout,
+            self.assign(spark, batch, index_dir),
+            self.part_col,
+            self._parts(spark),
+            key=self.pkey or self.key,
+            keymap=self._keymap_on(spark),
+        )
+
+    def upsert(
+        self, spark: SparkSession, batch: DataFrame, index_dir: str
+    ) -> tuple[int, int]:
+        """Keyed replace-or-insert (upsert_rows). Returns
+        ``(n_replaced, n_inserted)``, in keys."""
+        self.open(spark, index_dir)
+        return upsert_rows(
+            spark,
+            index_dir,
+            self.marker,
+            self.layout,
+            self.assign(spark, batch, index_dir),
+            self.part_col,
+            self._parts(spark),
+            key=self.key,
+            keymap=self._keymap_on(spark),
+            multi_rows=self.multi_rows,
+        )
+
+    def upsert_delete(
+        self,
+        spark: SparkSession,
+        batch: DataFrame,
+        keys: DataFrame,
+        index_dir: str,
+    ) -> tuple[int, int, int]:
+        """Upsert ``batch`` and delete ``keys`` (disjoint key sets) in one
+        swap (upsert_delete_rows; row-sets per key when ``multi_rows``).
+        Returns ``(n_deleted, n_replaced, n_inserted)``."""
+        self.open(spark, index_dir)
+        return _upsert_delete_impl(
+            spark,
+            index_dir,
+            self.marker,
+            self.layout,
+            self.assign(spark, batch, index_dir),
+            keys,
+            self.part_col,
+            self._parts(spark),
+            self.key,
+            self._keymap_on(spark),
+            self.multi_rows,
+        )
+
+    def delete(self, spark: SparkSession, keys: DataFrame, index_dir: str) -> int:
+        """Tombstone ``keys`` (any frame with the key column). A feed
+        carrying the partition column prunes to it (cross-checked); a
+        derivable partition is derived and trusted; otherwise the keymap
+        locates what it can and the rest pays the slim key scan. Returns
+        new tombstones recorded."""
+        self.open(spark, index_dir)
+        args = (spark, index_dir, self.marker, self.layout)
+        if self.multi_rows:  # a key's rows span partitions: no part locates it
+            return delete_keys(*args, keys, key=self.key)
+        if self.part_col in keys.columns:
+            return delete_keys(*args, keys, key=self.key, part_col=self.part_col)
+        if self.key_part is not None:
+            return delete_keys(
+                *args,
+                keys.withColumn(self.part_col, self.key_part()),
+                key=self.key,
+                part_col=self.part_col,
+                trusted_parts=True,
+            )
+        if self.keymap:
+            return delete_keys_by_map(
+                *args, keys, key=self.key, part_col=self.part_col
+            )
+        return delete_keys(*args, keys, key=self.key)
+
+    def compact(
+        self, spark: SparkSession, index_dir: str, finalize_tmp=None
+    ) -> int:
+        """Rewrite to one file per partition, applying tombstones
+        (compact_index). ``finalize_tmp(spark, tmp_dir)`` stages refreshed
+        artifacts inside the rewrite. Returns the compacted row count."""
+        self.open(spark, index_dir)
+        return compact_index(
+            spark,
+            index_dir,
+            self.marker,
+            self.part_col,
+            self._parts(spark),
+            key=self.key,
+            finalize_tmp=(
+                None
+                if finalize_tmp is None
+                else lambda tmp: finalize_tmp(spark, tmp)
+            ),
+        )
+
+    def stream(
+        self,
+        stream: DataFrame,
+        index_dir: str,
+        checkpoint_dir: str,
+        compact_every: int = 0,
+        compact_when_tombstones_over: int = 0,
+        finalize_tmp=None,
+    ):
+        """Always-on ingest: foreachBatch → ingest, exactly-once at the
+        sink by ingest's dedup. ``compact_every=N`` compacts in the lane
+        every Nth epoch, ``compact_when_tombstones_over=B`` when pending
+        tombstones pass B bytes (compaction_due) — single-writer by
+        construction. Returns the StreamingQuery."""
+        spark = stream.sparkSession
+
+        def _ingest(batch_df: DataFrame, epoch_id: int) -> None:
+            self.ingest(spark, batch_df, index_dir)
+            if compaction_due(
+                spark, index_dir, epoch_id, compact_every,
+                compact_when_tombstones_over,
+            ):
+                self.compact(spark, index_dir, finalize_tmp)
+
+        return _foreach_batch(stream, _ingest, checkpoint_dir)
+
+    def delete_stream(
+        self, stream: DataFrame, index_dir: str, checkpoint_dir: str
+    ):
+        """Always-on deletes: foreachBatch → delete; a replayed batch
+        records nothing (delete skips tombstoned keys)."""
+        spark = stream.sparkSession
+
+        def _delete(batch_df: DataFrame, epoch_id: int) -> None:
+            self.delete(spark, batch_df, index_dir)
+
+        return _foreach_batch(stream, _delete, checkpoint_dir)
+
+
+def _foreach_batch(stream: DataFrame, fn, checkpoint_dir: str):
+    return (
+        stream.writeStream.foreachBatch(fn)
+        .option("checkpointLocation", checkpoint_dir)
+        .trigger(availableNow=True)
+        .start()
     )

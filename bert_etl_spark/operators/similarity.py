@@ -29,7 +29,11 @@ from pyspark.sql import functions as F
 
 from bert_etl_spark.functions.deterministic import dsum, sql_dsum
 from bert_etl_spark.functions.localdf import local_frame
-from bert_etl_spark.operators.index_lifecycle import read_with_cached_schema
+from bert_etl_spark.operators.index_lifecycle import (
+    IndexFamily,
+    read_with_cached_schema,
+    shuffle_parts,
+)
 from bert_etl_spark.operators.registry import (
     ALL_ORACLES,
     checkpoint_get,
@@ -348,13 +352,6 @@ IVF_INDEX_DIR_CONF = "spark.bert_etl.ivf.indexDir"
 _IVF_MARKER = "_n_centroids"
 
 
-def _ivf_index_dir(spark: SparkSession) -> str | None:
-    try:
-        return spark.conf.get(IVF_INDEX_DIR_CONF, None)
-    except Exception:
-        return None
-
-
 def _ivf_centroids(spark: SparkSession, sf_dir: str) -> DataFrame:
     """The deterministic IVF coarse quantizer: the first N_CENTROIDS
     corpus vectors (first-N vs trained centroids was A/B'd and first-N
@@ -402,41 +399,18 @@ def _ivf_assign(
     shared lifecycle: open recovers/refuses, build is sentinel-guarded,
     the quantizer freezes as ``_codebook``, pending tombstones are masked
     out of the read), else built once per session via checkpoint_once."""
-    from bert_etl_spark.operators.index_lifecycle import (
-        apply_tombstones,
-        build_index,
-        open_index,
-    )
+    from bert_etl_spark.operators.index_lifecycle import apply_tombstones
 
-    index_dir = index_dir or _ivf_index_dir(spark)
+    index_dir = index_dir or spark.conf.get(IVF_INDEX_DIR_CONF, None)
     if index_dir:
-        marker = open_index(spark, index_dir, _IVF_MARKER, "cell")
-        if marker is not None and marker != N_CENTROIDS:
-            raise ValueError(
-                f"IVF index at {index_dir} was built with {marker} "
-                f"centroids but this build quantizes into {N_CENTROIDS} — "
-                "the quantizer is a persistent layout property; point the "
-                "conf at a fresh dir (or delete the stale index to rebuild)"
-            )
-        if marker is None:
-            from bert_etl_spark.operators.index_lifecycle import keymap_enabled
-
-            n_parts = int(
-                spark.conf.get("spark.sql.shuffle.partitions", "32") or "32"
-            )
-            build_index(
-                spark,
-                index_dir,
-                _IVF_MARKER,
-                N_CENTROIDS,
-                _ivf_assign_plan(spark, sf_dir),
-                "cell",
-                min(n_parts, N_CENTROIDS),
-                finalize=lambda: _write_codebook(
-                    spark, sf_dir, index_dir, _ivf_centroids(spark, sf_dir)
-                ),
-                keymap_key="vec_id" if keymap_enabled(spark) else None,
-            )
+        IVF_FAMILY.open_or_build(
+            spark,
+            index_dir,
+            lambda: _ivf_assign_plan(spark, sf_dir),
+            finalize=lambda: _write_codebook(
+                spark, sf_dir, index_dir, _ivf_centroids(spark, sf_dir)
+            ),
+        )
         return apply_tombstones(
             spark,
             index_dir,
@@ -449,11 +423,8 @@ def _ivf_assign(
     hit = checkpoint_get(spark, "ivf_assign", sf_dir)
     if hit is not None:
         return hit
-    n_parts = int(
-        spark.conf.get("spark.sql.shuffle.partitions", "32") or "32"
-    )
     assign = _ivf_assign_plan(spark, sf_dir).repartition(
-        min(n_parts, N_CENTROIDS), "cell"
+        shuffle_parts(spark, N_CENTROIDS), "cell"
     )
     return checkpoint_once(assign, "ivf_assign", sf_dir)
 
@@ -470,122 +441,18 @@ def _ivf_cells_scan(
     predicate rides the probe join)."""
     from bert_etl_spark.operators.index_lifecycle import pruned_scan
 
-    index_dir = index_dir or _ivf_index_dir(spark)
+    index_dir = index_dir or spark.conf.get(IVF_INDEX_DIR_CONF, None)
     if not index_dir:
         return assign
     pruned = pruned_scan(spark, index_dir, "cell", cells)
     return assign if pruned is None else _ivf_index_columns(pruned)
 
 
-def ivf_index_ingest(
-    spark: SparkSession, batch: DataFrame, index_dir: str
-) -> int:
-    """Ingest new single vectors into the standing durable IVF index:
-    assign with the index's own frozen ``_codebook``, dedup within the
-    batch and against the index's vec_id column, append into cell= dirs —
-    maxsim_index_ingest's single-vector twin through the shared
-    lifecycle. ``batch``: (vec_id, embedding)."""
-    from bert_etl_spark.operators.index_lifecycle import ingest_rows, open_index
-
-    marker = open_index(spark, index_dir, _IVF_MARKER, "cell")
-    if marker is None:
-        raise ValueError(
-            f"no standing IVF index at {index_dir} — build it first (set "
-            "spark.bert_etl.ivf.indexDir and run sim_ivf, or call "
-            "_ivf_assign)"
-        )
-    if marker != N_CENTROIDS:
-        raise ValueError(
-            f"IVF index at {index_dir} was built with {marker} centroids "
-            f"but this build quantizes into {N_CENTROIDS} — rebuild or "
-            "point at a fresh dir"
-        )
-    cent_rows = read_codebook(spark, index_dir)
-    # the payload column rides along when the arrival carries it; a
-    # payload-less arrival lands with a NULL label (filtered probes then
-    # simply never match it — the vector-store semantics)
-    lbl = (
-        F.col("label").cast("int")
-        if "label" in batch.columns
-        else F.lit(None).cast("int")
-    )
-    assigned = (
-        batch.select("vec_id", lbl.alias("label"), F.col("embedding"))
-        .withColumn("e", as_double(F.col("embedding")))
-        .withColumn("nrm", l2_norm(F.col("e")))
-        .select(
-            "vec_id", "label", "e", "nrm", _argmax_cell(cent_rows).alias("cell")
-        )
-    )
-    from bert_etl_spark.operators.index_lifecycle import keymap_enabled
-
-    n_parts = int(
-        spark.conf.get("spark.sql.shuffle.partitions", "32") or "32"
-    )
-    return ingest_rows(
-        spark,
-        index_dir,
-        _IVF_MARKER,
-        N_CENTROIDS,
-        assigned,
-        "cell",
-        min(n_parts, N_CENTROIDS),
-        keymap=keymap_enabled(spark),
-    )
-
-
-def ivf_index_upsert(
-    spark: SparkSession, batch: DataFrame, index_dir: str
-) -> tuple[int, int]:
-    """Keyed upsert into the standing durable IVF index: re-embedded
-    vectors REPLACE their standing rows in place (wherever the frozen
-    quantizer had filed them — including a move to a different cell when
-    the new embedding assigns differently), fresh keys insert, and a
-    currently-tombstoned key resurrects atomically with its new row —
-    the delete→compact→re-ingest cycle the ingest contract prescribes
-    for updates, collapsed into one sentinel commit (upsert_rows).
-    ``batch``: (vec_id, embedding[, label]). Returns
-    ``(n_replaced, n_inserted)``."""
-    from bert_etl_spark.operators.index_lifecycle import (
-        keymap_enabled,
-        open_index,
-        upsert_rows,
-    )
-
-    marker = open_index(spark, index_dir, _IVF_MARKER, "cell")
-    if marker is None:
-        raise ValueError(
-            f"no standing IVF index at {index_dir} — build it first (set "
-            "spark.bert_etl.ivf.indexDir and run sim_ivf, or call "
-            "_ivf_assign)"
-        )
-    if marker != N_CENTROIDS:
-        raise ValueError(
-            f"IVF index at {index_dir} was built with {marker} centroids "
-            f"but this build quantizes into {N_CENTROIDS} — rebuild or "
-            "point at a fresh dir"
-        )
-    assigned = _ivf_upsert_assigned(spark, batch, index_dir)
-    n_parts = int(
-        spark.conf.get("spark.sql.shuffle.partitions", "32") or "32"
-    )
-    return upsert_rows(
-        spark,
-        index_dir,
-        _IVF_MARKER,
-        N_CENTROIDS,
-        assigned,
-        "cell",
-        min(n_parts, N_CENTROIDS),
-        keymap=keymap_enabled(spark),
-    )
-
-
-def _ivf_upsert_assigned(
-    spark: SparkSession, batch: DataFrame, index_dir: str
-) -> DataFrame:
-    """The upsert batch assigned under the index's frozen quantizer —
-    shared by the keyed upsert and the combined upsert+delete verb."""
+def _ivf_rows(spark: SparkSession, batch: DataFrame, index_dir: str) -> DataFrame:
+    """Arrivals (vec_id, embedding[, label]) as IVF index rows, assigned
+    with the index's frozen ``_codebook``. A payload-less arrival lands
+    with a NULL label (filtered probes never match it — the vector-store
+    semantics)."""
     cent_rows = read_codebook(spark, index_dir)
     lbl = (
         F.col("label").cast("int")
@@ -603,157 +470,23 @@ def _ivf_upsert_assigned(
     )
 
 
-def ivf_index_upsert_delete(
-    spark: SparkSession, batch: DataFrame, keys: DataFrame, index_dir: str
-) -> tuple[int, int, int]:
-    """Keyed upsert AND keyed delete against the standing durable IVF
-    index in ONE touched-partition rewrite and sentinel swap
-    (index_lifecycle.upsert_delete_rows) — the combined verb
-    cdc_index_sync routes its per-key argmax delta through: same end
-    state as ivf_index_delete followed by ivf_index_upsert (the two key
-    sets are disjoint by the argmax contract), half the per-sync verb
-    machinery (round-15). ``batch``: (vec_id, embedding[, label]);
-    ``keys``: any frame with a vec_id column. Returns
-    ``(n_deleted, n_replaced, n_inserted)``."""
-    from bert_etl_spark.operators.index_lifecycle import (
-        keymap_enabled,
-        open_index,
-        upsert_delete_rows,
-    )
-
-    marker = open_index(spark, index_dir, _IVF_MARKER, "cell")
-    if marker is None:
-        raise ValueError(
-            f"no standing IVF index at {index_dir} — build it first (set "
-            "spark.bert_etl.ivf.indexDir and run sim_ivf, or call "
-            "_ivf_assign)"
-        )
-    if marker != N_CENTROIDS:
-        raise ValueError(
-            f"IVF index at {index_dir} was built with {marker} centroids "
-            f"but this build quantizes into {N_CENTROIDS} — rebuild or "
-            "point at a fresh dir"
-        )
-    assigned = _ivf_upsert_assigned(spark, batch, index_dir)
-    n_parts = int(
-        spark.conf.get("spark.sql.shuffle.partitions", "32") or "32"
-    )
-    return upsert_delete_rows(
-        spark,
-        index_dir,
-        _IVF_MARKER,
-        N_CENTROIDS,
-        assigned,
-        keys,
-        "cell",
-        min(n_parts, N_CENTROIDS),
-        keymap=keymap_enabled(spark),
-    )
-
-
-def ivf_index_compact(spark: SparkSession, index_dir: str) -> int:
-    """Compact the grown IVF index back to one file per cell through the
-    shared crash-safe protocol (tmp + pending sentinel + per-cell swap)."""
-    from bert_etl_spark.functions.markers import read_int_marker
-    from bert_etl_spark.operators.index_lifecycle import compact_index
-
-    if read_int_marker(spark, f"{index_dir}/{_IVF_MARKER}") is None:
-        raise ValueError(
-            f"no standing IVF index at {index_dir} — nothing to compact"
-        )
-    n_parts = int(
-        spark.conf.get("spark.sql.shuffle.partitions", "32") or "32"
-    )
-    return compact_index(
-        spark, index_dir, _IVF_MARKER, "cell", min(n_parts, N_CENTROIDS)
-    )
-
-
-def ivf_index_stream(
-    stream: DataFrame,
-    index_dir: str,
-    checkpoint_dir: str,
-    compact_every: int = 0,
-    compact_when_tombstones_over: int = 0,
-):
-    """Always-on ingest of arriving vectors into the standing durable IVF
-    index (foreachBatch → ivf_index_ingest) — idempotent under replay via
-    the anti-join, like its MaxSim and sign-LSH twins. ``compact_every=N``
-    runs ivf_index_compact inside the lane on every Nth epoch (in-path
-    maintenance, single-writer by construction — the ledger's
-    compact_every idiom; 0 = external cadence).
-    ``compact_when_tombstones_over=B``: compact when pending tombstone
-    bytes exceed B (compaction_due — measured masking debt instead of a
-    blind cadence; either trigger suffices)."""
-    from bert_etl_spark.operators.index_lifecycle import compaction_due
-
-    spark = stream.sparkSession
-
-    def _ingest(batch_df: DataFrame, epoch_id: int) -> None:
-        ivf_index_ingest(spark, batch_df, index_dir)
-        if compaction_due(
-            spark, index_dir, epoch_id, compact_every,
-            compact_when_tombstones_over,
-        ):
-            ivf_index_compact(spark, index_dir)
-
-    return (
-        stream.writeStream.foreachBatch(_ingest)
-        .option("checkpointLocation", checkpoint_dir)
-        .trigger(availableNow=True)
-        .start()
-    )
-
-
-def ivf_index_delete_stream(
-    stream: DataFrame, index_dir: str, checkpoint_dir: str
-):
-    """Always-on deletes against the standing durable IVF index
-    (foreachBatch → ivf_index_delete) — the delete verb's streaming
-    sibling, completing verb parity with ingest (ivf_index_stream).
-    Idempotent under replay: delete_keys skips keys already tombstoned,
-    so a re-delivered batch records nothing. ``stream``: rows carrying a
-    vec_id column (a CDC delete feed, a GDPR opt-out topic)."""
-    spark = stream.sparkSession
-
-    def _delete(batch_df: DataFrame, epoch_id: int) -> None:
-        ivf_index_delete(spark, batch_df, index_dir)
-
-    return (
-        stream.writeStream.foreachBatch(_delete)
-        .option("checkpointLocation", checkpoint_dir)
-        .trigger(availableNow=True)
-        .start()
-    )
-
-
-def ivf_index_delete(
-    spark: SparkSession, keys: DataFrame, index_dir: str
-) -> int:
-    """Tombstone-delete vectors from the standing durable IVF index —
-    the lifecycle's DELETE verb (build/ingest/stream/compact existed;
-    vector stores also need removal: revoked documents, opted-out users,
-    re-embedded corpora). Logical until the next compact: probes mask the
-    keys immediately (pruned_scan anti-joins the ``_tombstones`` table),
-    ivf_index_compact applies them physically and clears them. ``keys``:
-    any frame with a vec_id column. Returns new tombstones recorded."""
-    from bert_etl_spark.operators.index_lifecycle import (
-        delete_keys,
-        delete_keys_by_map,
-    )
-
-    # a delete feed that recorded the cell at ingest time gets the
-    # O(touched-partitions) liveness check; a bare vec_id feed goes
-    # through the persisted key→partition map when the index carries one
-    # (spark.bert_etl.index.keymap at build/ingest time), else the
-    # column-pruned full key scan (delete_keys' documented honest cost)
-    if "cell" in keys.columns:
-        return delete_keys(
-            spark, index_dir, _IVF_MARKER, N_CENTROIDS, keys, part_col="cell"
-        )
-    return delete_keys_by_map(
-        spark, index_dir, _IVF_MARKER, N_CENTROIDS, keys, part_col="cell"
-    )
+IVF_FAMILY = IndexFamily(
+    name="IVF index",
+    unit="centroids",
+    marker=_IVF_MARKER,
+    layout=N_CENTROIDS,
+    part_col="cell",
+    part_cap=N_CENTROIDS,
+    assign=_ivf_rows,
+    keymap=True,
+)
+ivf_index_ingest = IVF_FAMILY.ingest
+ivf_index_upsert = IVF_FAMILY.upsert
+ivf_index_upsert_delete = IVF_FAMILY.upsert_delete
+ivf_index_delete = IVF_FAMILY.delete
+ivf_index_compact = IVF_FAMILY.compact
+ivf_index_stream = IVF_FAMILY.stream
+ivf_index_delete_stream = IVF_FAMILY.delete_stream
 
 
 # The registered delete demo: build the durable IVF index in a session-
@@ -865,7 +598,7 @@ def sim_index_delete(spark: SparkSession, sf_dir: str) -> DataFrame:
 def sim_ivf(spark: SparkSession, sf_dir: str) -> DataFrame:
     # stage 1: the at-rest cell assignment (session-shared, or the durable
     # partitionBy(cell) index under spark.bert_etl.ivf.indexDir)
-    index_dir = _ivf_index_dir(spark)
+    index_dir = spark.conf.get(IVF_INDEX_DIR_CONF, None)
     assign = _ivf_assign(spark, sf_dir)
     return _ivf_topk(spark, sf_dir, assign, index_dir)
 
@@ -1044,17 +777,14 @@ SIMLSH_INDEX_DIR_CONF = "spark.bert_etl.simlsh.indexDir"
 _SIMLSH_MARKER = "_n_planes"
 
 
-def _simlsh_index_dir(spark: SparkSession) -> str | None:
-    try:
-        return spark.conf.get(SIMLSH_INDEX_DIR_CONF, None)
-    except Exception:
-        return None
-
-
 def _lsh_index_columns(df: DataFrame) -> DataFrame:
     return df.select(
         "vec_id", "e", "nrm", F.col("bucket").cast("int").alias("bucket")
     )
+
+
+def _lsh_plan(spark: SparkSession, sf_dir: str) -> DataFrame:
+    return _prepared(spark, sf_dir).withColumn("bucket", sign_bucket(F.col("e")))
 
 
 def _lsh_bucket_table(spark: SparkSession, sf_dir: str) -> DataFrame:
@@ -1065,42 +795,15 @@ def _lsh_bucket_table(spark: SparkSession, sf_dir: str) -> DataFrame:
     the ledger's `_n_buckets` contract; open_index recovers interrupted
     compactions and refuses unmarked data, the shared lifecycle), else
     session-lifetime checkpoint_once blocks."""
-    from bert_etl_spark.operators.index_lifecycle import build_index, open_index
+    from bert_etl_spark.operators.index_lifecycle import apply_tombstones
 
-    index_dir = _simlsh_index_dir(spark)
+    index_dir = spark.conf.get(SIMLSH_INDEX_DIR_CONF, None)
     if not index_dir:
         hit = checkpoint_get(spark, "simlsh_buckets", sf_dir)
         if hit is not None:
             return hit
-        assign = _prepared(spark, sf_dir).withColumn(
-            "bucket", sign_bucket(F.col("e"))
-        )
-        return checkpoint_once(assign, "simlsh_buckets", sf_dir)
-    marker = open_index(spark, index_dir, _SIMLSH_MARKER, "bucket")
-    if marker is not None and marker != N_PLANES:
-        raise ValueError(
-            f"sign-LSH index at {index_dir} was built with {marker} planes "
-            f"but this build hashes with {N_PLANES} — the plane count is a "
-            "persistent layout property; migrate it in place with "
-            f"simlsh_index_rebuild(spark, index_dir, {N_PLANES}), or point "
-            "the conf at a fresh dir"
-        )
-    if marker is None:
-        assign = _prepared(spark, sf_dir).withColumn(
-            "bucket", sign_bucket(F.col("e"))
-        )
-        n_parts = int(
-            spark.conf.get("spark.sql.shuffle.partitions", "32") or "32"
-        )
-        from bert_etl_spark.operators.index_lifecycle import keymap_enabled
-
-        build_index(
-            spark, index_dir, _SIMLSH_MARKER, N_PLANES, assign, "bucket",
-            n_parts,
-            keymap_key="vec_id" if keymap_enabled(spark) else None,
-        )
-    from bert_etl_spark.operators.index_lifecycle import apply_tombstones
-
+        return checkpoint_once(_lsh_plan(spark, sf_dir), "simlsh_buckets", sf_dir)
+    SIMLSH_FAMILY.open_or_build(spark, index_dir, lambda: _lsh_plan(spark, sf_dir))
     return apply_tombstones(
         spark,
         index_dir,
@@ -1112,177 +815,60 @@ def _lsh_bucket_table(spark: SparkSession, sf_dir: str) -> DataFrame:
     )
 
 
-def simlsh_index_ingest(
-    spark: SparkSession, batch: DataFrame, index_dir: str
-) -> int:
-    """Ingest a batch of new vectors into the standing durable sign-LSH
-    index: hash each with the module's deterministic PLANES (unlike the
-    MaxSim quantizer, the hyperplanes are compile-time constants — no
-    codebook artifact to freeze), dedup within the batch and against the
-    index's vec_id column, APPEND survivors into their bucket= dirs.
-    Returns the number of rows ingested. ``batch``: (vec_id, embedding).
-    Completes the sign-LSH lifecycle to parity with the MaxSim index
-    (round-10 ask #3); single-writer vs compact, as everywhere."""
-    from bert_etl_spark.operators.index_lifecycle import ingest_rows, open_index
-
-    marker = open_index(spark, index_dir, _SIMLSH_MARKER, "bucket")
-    if marker is None:
-        raise ValueError(
-            f"no standing sign-LSH index at {index_dir} — build it first "
-            "(set spark.bert_etl.simlsh.indexDir and run "
-            "sim_lsh_index_probe, or call _lsh_bucket_table)"
-        )
-    if marker != N_PLANES:
-        raise ValueError(
-            f"sign-LSH index at {index_dir} was built with {marker} planes "
-            f"but this build hashes with {N_PLANES} — migrate with "
-            f"simlsh_index_rebuild(spark, index_dir, {N_PLANES}) or point "
-            "at a fresh dir"
-        )
-    assigned = (
+def _lsh_rows(batch: DataFrame, planes: list[list[int]]) -> DataFrame:
+    """Arrivals (vec_id, embedding) as sign-LSH index rows, hashed with
+    ``planes`` — the module's deterministic planes are compile-time
+    constants, so there is no frozen artifact to read."""
+    return (
         batch.select("vec_id", as_double(F.col("embedding")).alias("e"))
         .withColumn("nrm", l2_norm(F.col("e")))
-        .withColumn("bucket", sign_bucket(F.col("e")))
+        .withColumn("bucket", sign_bucket(F.col("e"), planes).cast("int"))
     )
-    n_parts = int(
-        spark.conf.get("spark.sql.shuffle.partitions", "32") or "32"
-    )
-    from bert_etl_spark.operators.index_lifecycle import keymap_enabled
 
-    return ingest_rows(
-        spark,
-        index_dir,
-        _SIMLSH_MARKER,
-        N_PLANES,
-        assigned,
-        "bucket",
-        min(n_parts, 1 << N_PLANES),
-        keymap=keymap_enabled(spark),
-    )
+
+SIMLSH_FAMILY = IndexFamily(
+    name="sign-LSH index",
+    unit="planes",
+    marker=_SIMLSH_MARKER,
+    layout=N_PLANES,
+    part_col="bucket",
+    part_cap=1 << N_PLANES,
+    assign=lambda spark, batch, index_dir: _lsh_rows(batch, PLANES),
+    keymap=True,
+)
+simlsh_index_ingest = SIMLSH_FAMILY.ingest
 
 
 def simlsh_index_upsert(
     spark: SparkSession, batch: DataFrame, index_dir: str
 ) -> tuple[int, int]:
-    """ivf_index_upsert's sign-LSH twin: re-embedded vectors REPLACE
-    their standing rows (re-hashed with the module's deterministic
-    planes at the index's stamped plane count), fresh keys insert,
-    tombstoned keys resurrect atomically — upsert_rows through the
-    partial-swap protocol. ``batch``: (vec_id, embedding). Returns
-    (n_replaced, n_inserted)."""
+    """SIMLSH_FAMILY.upsert, except that an index migrated to another
+    plane count (simlsh_index_rebuild) is upserted at its STAMPED count
+    instead of refused — the rows re-hash with ``planes_for(stamped)``."""
     from bert_etl_spark.operators.index_lifecycle import (
         keymap_enabled,
         open_index,
         upsert_rows,
     )
 
-    marker = open_index(spark, index_dir, _SIMLSH_MARKER, "bucket")
-    if marker is None:
-        raise ValueError(
-            f"no standing sign-LSH index at {index_dir} — build it first"
-        )
-    assigned = (
-        batch.select("vec_id", as_double(F.col("embedding")).alias("e"))
-        .withColumn("nrm", l2_norm(F.col("e")))
-        .withColumn(
-            "bucket",
-            sign_bucket(F.col("e"), planes_for(marker)).cast("int"),
-        )
-    )
-    n_parts = int(
-        spark.conf.get("spark.sql.shuffle.partitions", "32") or "32"
-    )
+    n = open_index(spark, index_dir, _SIMLSH_MARKER, "bucket")
+    if n is None or n == N_PLANES:
+        return SIMLSH_FAMILY.upsert(spark, batch, index_dir)
     return upsert_rows(
         spark,
         index_dir,
         _SIMLSH_MARKER,
-        marker,
-        assigned,
+        n,
+        _lsh_rows(batch, planes_for(n)),
         "bucket",
-        min(n_parts, 1 << marker),
+        shuffle_parts(spark, 1 << n),
         keymap=keymap_enabled(spark),
     )
 
 
-def simlsh_index_compact(spark: SparkSession, index_dir: str) -> int:
-    """Compact the grown sign-LSH index back to one file per bucket —
-    maxsim_index_compact's twin through the shared crash-safe protocol
-    (tmp table + pending sentinel + per-bucket swap + re-stamp)."""
-    from bert_etl_spark.functions.markers import read_int_marker
-    from bert_etl_spark.operators.index_lifecycle import compact_index
-
-    if read_int_marker(spark, f"{index_dir}/{_SIMLSH_MARKER}") is None:
-        raise ValueError(
-            f"no standing sign-LSH index at {index_dir} — nothing to compact"
-        )
-    n_parts = int(
-        spark.conf.get("spark.sql.shuffle.partitions", "32") or "32"
-    )
-    return compact_index(
-        spark, index_dir, _SIMLSH_MARKER, "bucket", min(n_parts, 1 << N_PLANES)
-    )
-
-
-def simlsh_index_delete(
-    spark: SparkSession, keys: DataFrame, index_dir: str
-) -> int:
-    """Tombstone-delete vectors from the standing sign-LSH index — the
-    family's missing delete verb (round-13 'next round' item #5; the
-    ivf/ivfpq twins landed earlier). Logical until the next compact;
-    probes mask immediately. A feed that recorded the bucket at ingest
-    time prunes directly (cross-checked); a BARE-KEY feed (GDPR opt-out
-    — no vector to re-hash) goes through the persisted key→partition map
-    when the index carries one (delete_keys_by_map), falling back to the
-    slim full key scan only for keys the map does not locate."""
-    from bert_etl_spark.operators.index_lifecycle import (
-        delete_keys,
-        delete_keys_by_map,
-    )
-
-    if "bucket" in keys.columns:
-        return delete_keys(
-            spark, index_dir, _SIMLSH_MARKER, N_PLANES, keys,
-            part_col="bucket",
-        )
-    return delete_keys_by_map(
-        spark, index_dir, _SIMLSH_MARKER, N_PLANES, keys, part_col="bucket"
-    )
-
-
-def simlsh_index_stream(
-    stream: DataFrame,
-    index_dir: str,
-    checkpoint_dir: str,
-    compact_every: int = 0,
-    compact_when_tombstones_over: int = 0,
-):
-    """Always-on ingest of arriving vectors into the standing durable
-    sign-LSH index: readStream of (vec_id, embedding) → foreachBatch →
-    simlsh_index_ingest per micro-batch — maxsim_index_stream's twin.
-    Exactly-once the same way: the anti-join keyed on vec_id makes any
-    replayed/re-delivered batch a no-op, so at-least-once delivery is
-    idempotent at the sink. ``compact_every=N``: in-path compaction on
-    every Nth epoch (0 = external cadence);
-    ``compact_when_tombstones_over=B``: compact on measured pending
-    tombstone bytes (compaction_due). Returns the StreamingQuery."""
-    from bert_etl_spark.operators.index_lifecycle import compaction_due
-
-    spark = stream.sparkSession
-
-    def _ingest(batch_df: DataFrame, epoch_id: int) -> None:
-        simlsh_index_ingest(spark, batch_df, index_dir)
-        if compaction_due(
-            spark, index_dir, epoch_id, compact_every,
-            compact_when_tombstones_over,
-        ):
-            simlsh_index_compact(spark, index_dir)
-
-    return (
-        stream.writeStream.foreachBatch(_ingest)
-        .option("checkpointLocation", checkpoint_dir)
-        .trigger(availableNow=True)
-        .start()
-    )
+simlsh_index_delete = SIMLSH_FAMILY.delete
+simlsh_index_compact = SIMLSH_FAMILY.compact
+simlsh_index_stream = SIMLSH_FAMILY.stream
 
 
 def simlsh_index_rebuild(
@@ -1371,9 +957,7 @@ def simlsh_index_rebuild(
     assigned = live.withColumn(
         "bucket", sign_bucket(F.col("e"), planes_for(n_planes)).cast("int")
     )
-    n_parts = int(
-        spark.conf.get("spark.sql.shuffle.partitions", "32") or "32"
-    )
+    n_parts = shuffle_parts(spark)
     tmp = f"{index_dir}{TMP_SUFFIX}"
     # row count rides the rewrite as an observed metric — previously a
     # full read-back count of the files just written (round-14 batch 4;
@@ -1440,7 +1024,7 @@ def _lsh_buckets_scan(
     index_lifecycle.pruned_scan idiom), the in-memory table otherwise."""
     from bert_etl_spark.operators.index_lifecycle import pruned_scan
 
-    index_dir = _simlsh_index_dir(spark)
+    index_dir = spark.conf.get(SIMLSH_INDEX_DIR_CONF, None)
     if not index_dir:
         return table
     pruned = pruned_scan(spark, index_dir, "bucket", buckets)
@@ -1475,7 +1059,7 @@ def sim_lsh_index_probe(spark: SparkSession, sf_dir: str) -> DataFrame:
         )
     )
     cand_side = table
-    if _simlsh_index_dir(spark):
+    if spark.conf.get(SIMLSH_INDEX_DIR_CONF, None):
         touched = [
             r["bucket"]
             for r in queries_df.select("bucket").distinct().collect()
@@ -1779,13 +1363,6 @@ _IVFPQ_MARKER = "_n_centroids"
 _PQ_CODEBOOK_DIR = "_pq_codebook"
 
 
-def _ivfpq_index_dir(spark: SparkSession) -> str | None:
-    try:
-        return spark.conf.get(IVFPQ_INDEX_DIR_CONF, None)
-    except Exception:
-        return None
-
-
 def _pq_codebook_frame(spark: SparkSession, sf_dir: str) -> DataFrame:
     """The deterministic PQ codebooks: subvectors of the first PQ_K corpus
     vectors, one codebook per subspace — (m, cid, cw). Same first-N
@@ -1884,24 +1461,16 @@ def ivfpq_build_or_open(spark: SparkSession, sf_dir: str, index_dir: str) -> Non
     """Ensure a standing IVF-PQ index at ``index_dir`` (shared lifecycle:
     open recovers/refuses, build is sentinel-guarded, BOTH quantizers
     freeze in the finalize hook before the marker commits)."""
-    from bert_etl_spark.operators.index_lifecycle import build_index, open_index
 
-    marker = open_index(spark, index_dir, _IVFPQ_MARKER, "cell")
-    if marker is not None and marker != N_CENTROIDS:
-        raise ValueError(
-            f"IVF-PQ index at {index_dir} was built with {marker} "
-            f"centroids but this build quantizes into {N_CENTROIDS} — "
-            "point the conf at a fresh dir or delete the stale index"
+    def _plan() -> DataFrame:
+        cent_rows = sorted(  # driver-side sorts of the bounded codebook
+            _ivf_centroids(spark, sf_dir).collect(), key=lambda r: r["cid"]
+        )  # collects — no range-exchange jobs (batch 6)
+        pq_rows = sorted(
+            _pq_codebook_frame(spark, sf_dir).collect(),
+            key=lambda r: (r["m"], r["cid"]),
         )
-    if marker is not None:
-        return
-    cent_rows = sorted(  # driver-side sorts of the bounded codebook
-        _ivf_centroids(spark, sf_dir).collect(), key=lambda r: r["cid"]
-    )  # collects — no range-exchange jobs (batch 6)
-    pq_rows = sorted(
-        _pq_codebook_frame(spark, sf_dir).collect(),
-        key=lambda r: (r["m"], r["cid"]),
-    )
+        return _ivfpq_assign_plan(spark, sf_dir, cent_rows, pq_rows)
 
     def _freeze():
         _write_codebook(spark, sf_dir, index_dir, _ivf_centroids(spark, sf_dir))
@@ -1909,92 +1478,14 @@ def ivfpq_build_or_open(spark: SparkSession, sf_dir: str, index_dir: str) -> Non
             "overwrite"
         ).parquet(f"{index_dir}/{_PQ_CODEBOOK_DIR}")
 
-    from bert_etl_spark.operators.index_lifecycle import keymap_enabled
-
-    n_parts = int(spark.conf.get("spark.sql.shuffle.partitions", "32") or "32")
-    build_index(
-        spark,
-        index_dir,
-        _IVFPQ_MARKER,
-        N_CENTROIDS,
-        _ivfpq_assign_plan(spark, sf_dir, cent_rows, pq_rows),
-        "cell",
-        min(n_parts, N_CENTROIDS),
-        finalize=_freeze,
-        keymap_key="vec_id" if keymap_enabled(spark) else None,
-    )
+    IVFPQ_FAMILY.open_or_build(spark, index_dir, _plan, finalize=_freeze)
 
 
-def ivfpq_index_ingest(spark: SparkSession, batch: DataFrame, index_dir: str) -> int:
-    """Ingest new vectors into the standing IVF-PQ index: assign cell AND
-    codes with the index's own frozen quantizers, then the shared
-    idempotent O(touched-partitions) append. ``batch``: (vec_id,
-    embedding[, label]). Validates via open_index, not a bare marker
-    read: with ivfpq_index_stream(compact_every=N) a crash inside the
-    compaction sentinel window (marker deleted, ``_compact_pending``
-    stamped) must let the REPLAYED epoch finish the swap and re-ingest —
-    a marker-only check would refuse and strand the stream (round-12
-    advice, the 'medium' item; the ivf/maxsim/simlsh ingest verbs
-    already recover this way)."""
-    from bert_etl_spark.operators.index_lifecycle import ingest_rows, open_index
-
-    if open_index(spark, index_dir, _IVFPQ_MARKER, "cell") != N_CENTROIDS:
-        raise ValueError(
-            f"no standing IVF-PQ index at {index_dir} (or a drifted "
-            "layout) — build it first (ivfpq_build_or_open)"
-        )
-    cent_rows = read_codebook(spark, index_dir)
-    pq_rows = read_pq_codebook(spark, index_dir)
-    lbl = (
-        F.col("label").cast("int")
-        if "label" in batch.columns
-        else F.lit(None).cast("int")
-    )
-    assigned = (
-        batch.select("vec_id", lbl.alias("label"), F.col("embedding"))
-        .withColumn("e", as_double(F.col("embedding")))
-        .select(
-            "vec_id",
-            "label",
-            _argmax_cell(cent_rows).cast("int").alias("cell"),
-            _pq_codes_col(pq_rows).alias("codes"),
-        )
-    )
-    from bert_etl_spark.operators.index_lifecycle import keymap_enabled
-
-    n_parts = int(spark.conf.get("spark.sql.shuffle.partitions", "32") or "32")
-    return ingest_rows(
-        spark,
-        index_dir,
-        _IVFPQ_MARKER,
-        N_CENTROIDS,
-        assigned,
-        "cell",
-        min(n_parts, N_CENTROIDS),
-        keymap=keymap_enabled(spark),
-    )
-
-
-def ivfpq_index_upsert(
+def _ivfpq_rows(
     spark: SparkSession, batch: DataFrame, index_dir: str
-) -> tuple[int, int]:
-    """ivf_index_upsert's codes-at-rest twin, completing upsert parity
-    across all four vector families: re-embedded vectors RE-ENCODE with
-    the index's frozen quantizers (new cell + new PQ codes) and REPLACE
-    their standing rows through the partial-swap protocol; fresh keys
-    insert; tombstoned keys resurrect atomically. ``batch``: (vec_id,
-    embedding[, label]). Returns (n_replaced, n_inserted)."""
-    from bert_etl_spark.operators.index_lifecycle import (
-        keymap_enabled,
-        open_index,
-        upsert_rows,
-    )
-
-    if open_index(spark, index_dir, _IVFPQ_MARKER, "cell") != N_CENTROIDS:
-        raise ValueError(
-            f"no standing IVF-PQ index at {index_dir} (or a drifted "
-            "layout) — build it first (ivfpq_build_or_open)"
-        )
+) -> DataFrame:
+    """Arrivals (vec_id, embedding[, label]) as IVF-PQ index rows: cell
+    AND PQ codes from the index's own frozen quantizers."""
     cent_rows = read_codebook(spark, index_dir)
     pq_rows = read_pq_codebook(spark, index_dir)
     lbl = (
@@ -2002,7 +1493,7 @@ def ivfpq_index_upsert(
         if "label" in batch.columns
         else F.lit(None).cast("int")
     )
-    assigned = (
+    return (
         batch.select("vec_id", lbl.alias("label"), F.col("embedding"))
         .withColumn("e", as_double(F.col("embedding")))
         .select(
@@ -2012,90 +1503,23 @@ def ivfpq_index_upsert(
             _pq_codes_col(pq_rows).alias("codes"),
         )
     )
-    n_parts = int(spark.conf.get("spark.sql.shuffle.partitions", "32") or "32")
-    return upsert_rows(
-        spark,
-        index_dir,
-        _IVFPQ_MARKER,
-        N_CENTROIDS,
-        assigned,
-        "cell",
-        min(n_parts, N_CENTROIDS),
-        keymap=keymap_enabled(spark),
-    )
 
 
-def ivfpq_index_stream(
-    stream: DataFrame,
-    index_dir: str,
-    checkpoint_dir: str,
-    compact_every: int = 0,
-    compact_when_tombstones_over: int = 0,
-):
-    """Always-on ingest of arriving vectors into the standing IVF-PQ
-    index (foreachBatch → ivfpq_index_ingest) — verb parity with the
-    other durable families; idempotent under replay via the shared
-    touched-partition anti-join. ``compact_every=N``: in-path compaction
-    on every Nth epoch (0 = external cadence);
-    ``compact_when_tombstones_over=B``: compact on measured pending
-    tombstone bytes (compaction_due)."""
-    from bert_etl_spark.operators.index_lifecycle import compaction_due
-
-    spark = stream.sparkSession
-
-    def _ingest(batch_df: DataFrame, epoch_id: int) -> None:
-        ivfpq_index_ingest(spark, batch_df, index_dir)
-        if compaction_due(
-            spark, index_dir, epoch_id, compact_every,
-            compact_when_tombstones_over,
-        ):
-            ivfpq_index_compact(spark, index_dir)
-
-    return (
-        stream.writeStream.foreachBatch(_ingest)
-        .option("checkpointLocation", checkpoint_dir)
-        .trigger(availableNow=True)
-        .start()
-    )
-
-
-def ivfpq_index_delete(spark: SparkSession, keys: DataFrame, index_dir: str) -> int:
-    """Tombstone-delete vectors from the standing IVF-PQ index (logical
-    until compact; probes mask immediately — the shared delete verb). A
-    feed that recorded the cell at ingest time prunes directly; a
-    BARE-KEY feed (GDPR opt-out — no vector to re-assign) goes through
-    the persisted key→partition map when the index carries one
-    (delete_keys_by_map), falling back to the slim full key scan only
-    for keys the map does not locate."""
-    from bert_etl_spark.operators.index_lifecycle import (
-        delete_keys,
-        delete_keys_by_map,
-    )
-
-    if "cell" in keys.columns:
-        return delete_keys(
-            spark, index_dir, _IVFPQ_MARKER, N_CENTROIDS, keys,
-            part_col="cell",
-        )
-    return delete_keys_by_map(
-        spark, index_dir, _IVFPQ_MARKER, N_CENTROIDS, keys, part_col="cell"
-    )
-
-
-def ivfpq_index_compact(spark: SparkSession, index_dir: str) -> int:
-    """Compact the grown IVF-PQ index (applies pending tombstones, one
-    file per cell) through the shared crash-safe protocol."""
-    from bert_etl_spark.functions.markers import read_int_marker
-    from bert_etl_spark.operators.index_lifecycle import compact_index
-
-    if read_int_marker(spark, f"{index_dir}/{_IVFPQ_MARKER}") is None:
-        raise ValueError(
-            f"no standing IVF-PQ index at {index_dir} — nothing to compact"
-        )
-    n_parts = int(spark.conf.get("spark.sql.shuffle.partitions", "32") or "32")
-    return compact_index(
-        spark, index_dir, _IVFPQ_MARKER, "cell", min(n_parts, N_CENTROIDS)
-    )
+IVFPQ_FAMILY = IndexFamily(
+    name="IVF-PQ index",
+    unit="centroids",
+    marker=_IVFPQ_MARKER,
+    layout=N_CENTROIDS,
+    part_col="cell",
+    part_cap=N_CENTROIDS,
+    assign=_ivfpq_rows,
+    keymap=True,
+)
+ivfpq_index_ingest = IVFPQ_FAMILY.ingest
+ivfpq_index_upsert = IVFPQ_FAMILY.upsert
+ivfpq_index_delete = IVFPQ_FAMILY.delete
+ivfpq_index_compact = IVFPQ_FAMILY.compact
+ivfpq_index_stream = IVFPQ_FAMILY.stream
 
 
 def ivfpq_index_rebuild(
@@ -2273,9 +1697,7 @@ def ivfpq_index_rebuild(
             _argmax_cell(cent_rows).cast("int").alias("cell"),
             _pq_codes_col(pq_rows).alias("codes"),
         )
-        n_parts = int(
-            spark.conf.get("spark.sql.shuffle.partitions", "32") or "32"
-        )
+        n_parts = shuffle_parts(spark)
         tmp = f"{index_dir}{TMP_SUFFIX}"
         # row count + unresolved-key count via observed metrics on the
         # rewrite — previously a full read-back count of the written
@@ -2485,9 +1907,7 @@ def _vector_index_rebuild(
                 "cell", _argmax_cell(cent_rows).cast("int")
             )
         )
-        n_parts = int(
-            spark.conf.get("spark.sql.shuffle.partitions", "32") or "32"
-        )
+        n_parts = shuffle_parts(spark)
         tmp = f"{index_dir}{TMP_SUFFIX}"
         # row count via observed metric on the rewrite — previously a
         # full read-back count of the written files (round-14 batch 4;
@@ -2806,7 +2226,7 @@ def sim_ivfpq_filtered(spark: SparkSession, sf_dir: str) -> DataFrame:
             .select("q_id", "neighbor_id", "adc_dot", "rn")
         )
 
-    index_dir = _ivfpq_index_dir(spark)
+    index_dir = spark.conf.get(IVFPQ_INDEX_DIR_CONF, None)
     if index_dir:
         ivfpq_build_or_open(spark, sf_dir, index_dir)
         return _probe(index_dir)
@@ -2831,7 +2251,7 @@ def sim_ivfpq_filtered(spark: SparkSession, sf_dir: str) -> DataFrame:
     """,
 )
 def sim_ivfpq_probe(spark: SparkSession, sf_dir: str) -> DataFrame:
-    index_dir = _ivfpq_index_dir(spark)
+    index_dir = spark.conf.get(IVFPQ_INDEX_DIR_CONF, None)
     if index_dir:
         ivfpq_build_or_open(spark, sf_dir, index_dir)
         return _ivfpq_topk(spark, sf_dir, index_dir)
@@ -2912,7 +2332,7 @@ def sim_ivfpq_rerank(spark: SparkSession, sf_dir: str) -> DataFrame:
             )
         )
 
-    index_dir = _ivfpq_index_dir(spark)
+    index_dir = spark.conf.get(IVFPQ_INDEX_DIR_CONF, None)
     if index_dir:
         ivfpq_build_or_open(spark, sf_dir, index_dir)
         return _rerank(index_dir)
@@ -3452,28 +2872,14 @@ def sim_lsh_rebuild_migrate(spark: SparkSession, sf_dir: str) -> DataFrame:
     from bert_etl_spark.functions.scratch import session_scratch_dir
     from bert_etl_spark.operators.index_lifecycle import (
         apply_tombstones,
-        build_index,
-        keymap_enabled,
         open_index,
         pruned_scan,
     )
 
     # dedicated scratch replica (mutating query — the isolation rule)
     idx = session_scratch_dir(spark, "lsh_migrate", sf_dir)
-    n_parts = int(
-        spark.conf.get("spark.sql.shuffle.partitions", "32") or "32"
-    )
-    marker = open_index(spark, idx, _SIMLSH_MARKER, "bucket")
-    if marker != SIMLSH_MIGRATE_PLANES:
-        if marker is None:
-            assign = _prepared(spark, sf_dir).withColumn(
-                "bucket", sign_bucket(F.col("e"))
-            )
-            build_index(
-                spark, idx, _SIMLSH_MARKER, N_PLANES, assign, "bucket",
-                min(n_parts, 1 << N_PLANES),
-                keymap_key="vec_id" if keymap_enabled(spark) else None,
-            )
+    if open_index(spark, idx, _SIMLSH_MARKER, "bucket") != SIMLSH_MIGRATE_PLANES:
+        SIMLSH_FAMILY.open_or_build(spark, idx, lambda: _lsh_plan(spark, sf_dir))
         emb = tbl(spark, sf_dir, "embeddings")
         shifted = emb.filter(
             (F.col("vec_id") >= DRIFT_SRC_START)
@@ -3818,20 +3224,11 @@ def streaming_cdc_index_sync(spark: SparkSession, sf_dir: str) -> DataFrame:
             ).awaitTermination()
 
         def sync() -> tuple:
-            # the COMBINED verb: both key sets land in one touched-
-            # partition rewrite + swap (upsert_delete_rows) — half the
-            # per-sync machinery of the sequential delete-then-upsert
-            # (round-15; same end state, certified by this oracle)
+            # both key sets land in one touched-partition rewrite + swap
+            # (IVF_FAMILY.upsert_delete); same end state as a delete
+            # followed by an upsert, certified by this oracle
             return cdc_index_sync(
-                spark,
-                state,
-                idx,
-                lambda b: ivf_index_upsert(spark, b, idx),
-                lambda ks: ivf_index_delete(spark, ks, idx),
-                payload_cols=("embedding", "label"),
-                upsert_delete=lambda b, ks: ivf_index_upsert_delete(
-                    spark, b, ks, idx
-                ),
+                spark, state, idx, IVF_FAMILY, payload_cols=("embedding", "label")
             )
 
         drain(batch1, "in1", "ck1")
@@ -3974,13 +3371,6 @@ MAXSIM_INDEX_DIR_CONF = "spark.bert_etl.maxsim.indexDir"
 _MAXSIM_MARKER = "_n_centroids"
 
 
-def _maxsim_index_dir(spark: SparkSession) -> str | None:
-    try:
-        return spark.conf.get(MAXSIM_INDEX_DIR_CONF, None)
-    except Exception:
-        return None
-
-
 def _codebook_frame(spark: SparkSession, index_dir: str) -> DataFrame | None:
     """The frozen quantizer as a (cid, ce) DataFrame, or None when the
     index has no codebook artifact yet (cold dir mid-build)."""
@@ -4019,7 +3409,7 @@ def _maxsim_quantizer(spark: SparkSession, sf_dir: str) -> DataFrame:
     prevent), the first-N corpus scan otherwise. Identical values at
     build time, so the registered queries' results don't depend on the
     mode."""
-    index_dir = _maxsim_index_dir(spark)
+    index_dir = spark.conf.get(MAXSIM_INDEX_DIR_CONF, None)
     if index_dir:
         cb = _codebook_frame(spark, index_dir)
         if cb is not None:
@@ -4060,39 +3450,17 @@ def _maxsim_assign_at_rest(
     session-lifetime path (one corpus scan, zero joins), repartitioned by
     cell so each of the |C| partition dirs lands as one file.
     """
-    from bert_etl_spark.operators.index_lifecycle import build_index, open_index
-
-    marker = open_index(spark, index_dir, _MAXSIM_MARKER, "cell")
-    if marker is not None and marker != MAXSIM_IVF_CENTROIDS:
-        raise ValueError(
-            f"MaxSim index at {index_dir} was built with "
-            f"{marker} centroids but this build quantizes into "
-            f"{MAXSIM_IVF_CENTROIDS} — the quantizer is a persistent "
-            "layout property; point the conf at a fresh dir (or delete "
-            "the stale index to rebuild)"
-        )
-    if marker is None:
-        n_parts = int(
-            spark.conf.get("spark.sql.shuffle.partitions", "32") or "32"
-        )
-        # the quantizer is PART OF the index artifact (the finalize hook):
-        # later ingests must assign with the codebook the table was built
-        # under, and the standing corpus isn't guaranteed to still contain
-        # the centroid vectors (an arrival batch may BE docs 0..k). The
-        # underscore prefix hides the subdir from the root table scan.
-        from bert_etl_spark.operators.index_lifecycle import keymap_enabled
-
-        build_index(
-            spark,
-            index_dir,
-            _MAXSIM_MARKER,
-            MAXSIM_IVF_CENTROIDS,
-            _maxsim_assign_plan(spark, sf_dir),
-            "cell",
-            n_parts,
-            finalize=lambda: _write_codebook(spark, sf_dir, index_dir),
-            keymap_key="vec_id" if keymap_enabled(spark) else None,
-        )
+    # the quantizer is PART OF the index artifact (the finalize hook):
+    # later ingests must assign with the codebook the table was built
+    # under, and the standing corpus isn't guaranteed to still contain
+    # the centroid vectors (an arrival batch may BE docs 0..k). The
+    # underscore prefix hides the subdir from the root table scan.
+    MAXSIM_FAMILY.open_or_build(
+        spark,
+        index_dir,
+        lambda: _maxsim_assign_plan(spark, sf_dir),
+        finalize=lambda: _write_codebook(spark, sf_dir, index_dir),
+    )
     from bert_etl_spark.operators.index_lifecycle import apply_tombstones
 
     return apply_tombstones(
@@ -4213,7 +3581,7 @@ def _maxsim_cells_scan(
     """
     from bert_etl_spark.operators.index_lifecycle import pruned_scan
 
-    index_dir = _maxsim_index_dir(spark)
+    index_dir = spark.conf.get(MAXSIM_INDEX_DIR_CONF, None)
     if not index_dir:
         return assign
     pruned = pruned_scan(spark, index_dir, "cell", cells)
@@ -4273,7 +3641,7 @@ def _maxsim_assign(spark: SparkSession, sf_dir: str) -> DataFrame:
     deployment scale this table is what you'd write partitionBy(cell) so
     probes prune to P partitions — exactly what the indexDir path does.
     """
-    index_dir = _maxsim_index_dir(spark)
+    index_dir = spark.conf.get(MAXSIM_INDEX_DIR_CONF, None)
     if index_dir:
         return _maxsim_assign_at_rest(spark, sf_dir, index_dir)
     hit = checkpoint_get(spark, "maxsim_ivf_assign", sf_dir)
@@ -4288,9 +3656,7 @@ def _maxsim_assign(spark: SparkSession, sf_dir: str) -> DataFrame:
     # count (a 100 MB corpus is 1-2 splits -- measured 13.3 s warm probes
     # vs 4-6 s with 32 blocks), (b) the layout mirrors the deployment
     # story, where this table is written partitionBy(cell)
-    n_parts = int(
-        spark.conf.get("spark.sql.shuffle.partitions", "32") or "32"
-    )
+    n_parts = shuffle_parts(spark)
     assign = assign.repartition(n_parts, "cell")
     return checkpoint_once(assign, "maxsim_ivf_assign", sf_dir)
 
@@ -4382,7 +3748,7 @@ def sim_maxsim_ivf(spark: SparkSession, sf_dir: str) -> DataFrame:
     # (bounded driver collect of the probe's cell ids, the ledger idiom).
     cand_side = _maxsim_cells_scan(
         spark, sf_dir, assign, _probed_cells(probes)
-        if _maxsim_index_dir(spark)
+        if spark.conf.get(MAXSIM_INDEX_DIR_CONF, None)
         else []
     )
     cand = (
@@ -4545,103 +3911,16 @@ def sim_embedding_outliers(spark: SparkSession, sf_dir: str) -> DataFrame:
     )
 
 
-def maxsim_index_ingest(
+def _maxsim_rows(
     spark: SparkSession, batch: DataFrame, index_dir: str
-) -> int:
-    """Ingest a batch of NEW multi-vector documents into the standing
-    durable MaxSim index: assign each token vector to its cell with the
-    quantizer THE INDEX ITSELF carries (the ``_codebook`` artifact frozen
-    at build time — the standing corpus need not still contain the
-    centroid vectors, and a side-channel codebook could drift),
-    drop token ids already present (anti-join on the index's slim vec_id
-    column: at-least-once producers re-deliver, the reference's ETLState
-    contract is new-items-vs-persisted-index, never blind append), and
-    APPEND the survivors into the cell= partition dirs. Returns the
-    number of token rows ingested.
-
-    ``batch``: (vec_id, embedding array<float|double>) — the raw arrival
-    shape. The marker is validated (and the quantizer loaded) through the
-    normal open path (which also recovers an interrupted compaction), so
-    a mismatched standing index refuses before any write; intra-batch
-    duplicate vec_ids collapse to one row and the marker is re-validated
-    immediately before the append (index_lifecycle.ingest_rows — the
-    single-writer tripwire). Growth math at 100 TB: an append touches
-    only the partitions its batch's cells hash to; probes keep pruning by
-    path; the exact rerank reads the grown table the same way. Compaction
-    of many small per-ingest files is maxsim_index_compact's job,
-    orthogonal here. Single-writer: never run concurrently with a
-    compact (see index_lifecycle's module docstring).
-    """
-    from bert_etl_spark.operators.index_lifecycle import ingest_rows, open_index
-
-    marker = open_index(spark, index_dir, _MAXSIM_MARKER, "cell")
-    if marker is None:
-        raise ValueError(
-            f"no standing MaxSim index at {index_dir} — build it first "
-            "(set spark.bert_etl.maxsim.indexDir and run any MaxSim "
-            "query, or call _maxsim_assign)"
-        )
-    if marker != MAXSIM_IVF_CENTROIDS:
-        raise ValueError(
-            f"MaxSim index at {index_dir} was built with {marker} "
-            f"centroids but this build quantizes into "
-            f"{MAXSIM_IVF_CENTROIDS} — rebuild or point at a fresh dir"
-        )
+) -> DataFrame:
+    """Arrivals (vec_id, embedding) as MaxSim index rows: each token
+    vector assigned to its cell with the quantizer THE INDEX ITSELF
+    carries (the ``_codebook`` frozen at build — the standing corpus
+    need not still contain the centroid vectors, and a side-channel
+    codebook could drift); doc = vec_id div MAXSIM_GROUP."""
     cent_rows = read_codebook(spark, index_dir)
-    prep = batch.select(
-        "vec_id", as_double(F.col("embedding")).alias("e")
-    ).withColumn("nrm", l2_norm(F.col("e"))).withColumn(
-        "doc", F.expr(f"vec_id div {MAXSIM_GROUP}")
-    )
-    assigned = prep.select(
-        "vec_id", "doc", "e", "nrm", _argmax_cell(cent_rows).alias("cell")
-    )
-    n_parts = int(
-        spark.conf.get("spark.sql.shuffle.partitions", "32") or "32"
-    )
-    from bert_etl_spark.operators.index_lifecycle import keymap_enabled
-
-    return ingest_rows(
-        spark,
-        index_dir,
-        _MAXSIM_MARKER,
-        MAXSIM_IVF_CENTROIDS,
-        assigned,
-        "cell",
-        min(n_parts, MAXSIM_IVF_CENTROIDS),
-        keymap=keymap_enabled(spark),
-    )
-
-
-def maxsim_index_upsert(
-    spark: SparkSession, batch: DataFrame, index_dir: str
-) -> tuple[int, int]:
-    """ivf_index_upsert's multi-vector twin: re-embedded token vectors
-    REPLACE their standing rows in place (re-assigned with the index's
-    frozen quantizer), fresh token ids insert, tombstoned ids resurrect
-    atomically — upsert_rows through the partial-swap protocol.
-    ``batch``: (vec_id, embedding). Returns (n_replaced, n_inserted)."""
-    from bert_etl_spark.operators.index_lifecycle import (
-        keymap_enabled,
-        open_index,
-        upsert_rows,
-    )
-
-    marker = open_index(spark, index_dir, _MAXSIM_MARKER, "cell")
-    if marker is None:
-        raise ValueError(
-            f"no standing MaxSim index at {index_dir} — build it first "
-            "(set spark.bert_etl.maxsim.indexDir and run any MaxSim "
-            "query, or call _maxsim_assign)"
-        )
-    if marker != MAXSIM_IVF_CENTROIDS:
-        raise ValueError(
-            f"MaxSim index at {index_dir} was built with {marker} "
-            f"centroids but this build quantizes into "
-            f"{MAXSIM_IVF_CENTROIDS} — rebuild or point at a fresh dir"
-        )
-    cent_rows = read_codebook(spark, index_dir)
-    assigned = (
+    return (
         batch.select("vec_id", as_double(F.col("embedding")).alias("e"))
         .withColumn("nrm", l2_norm(F.col("e")))
         .withColumn("doc", F.expr(f"vec_id div {MAXSIM_GROUP}"))
@@ -4650,125 +3929,23 @@ def maxsim_index_upsert(
             _argmax_cell(cent_rows).cast("int").alias("cell"),
         )
     )
-    n_parts = int(
-        spark.conf.get("spark.sql.shuffle.partitions", "32") or "32"
-    )
-    return upsert_rows(
-        spark,
-        index_dir,
-        _MAXSIM_MARKER,
-        MAXSIM_IVF_CENTROIDS,
-        assigned,
-        "cell",
-        min(n_parts, MAXSIM_IVF_CENTROIDS),
-        keymap=keymap_enabled(spark),
-    )
 
 
-def maxsim_index_compact(spark: SparkSession, index_dir: str) -> int:
-    """Compact a grown MaxSim index (per-ingest appends leave one file
-    per touched cell per batch) back to one file per cell, preserving the
-    partitionBy(cell) layout — the index-aware counterpart of
-    sources.sinks.compact_dataset (which would flatten the partitioning
-    the probes prune on). Returns the compacted row count.
-
-    CRASH-SAFE and RECOVERABLE (round-10 advice, the 'high' item) via the
-    shared protocol in index_lifecycle.compact_index: the compacted table
-    is fully written to a sibling ``_compact_tmp`` dir, a
-    ``_compact_pending`` sentinel carrying the layout value is stamped,
-    only THEN is the marker deleted and the per-cell swap run — so a
-    crash at any later step recovers from the tmp table on the next open
-    (finish_compaction_swap), never by rebuilding from the corpus (which
-    would silently drop ingested documents). Single-writer: never run
-    concurrently with an ingest."""
-    from bert_etl_spark.functions.markers import read_int_marker
-    from bert_etl_spark.operators.index_lifecycle import compact_index
-
-    if read_int_marker(spark, f"{index_dir}/{_MAXSIM_MARKER}") is None:
-        raise ValueError(
-            f"no standing MaxSim index at {index_dir} — nothing to compact"
-        )
-    n_parts = int(
-        spark.conf.get("spark.sql.shuffle.partitions", "32") or "32"
-    )
-    return compact_index(
-        spark,
-        index_dir,
-        _MAXSIM_MARKER,
-        "cell",
-        min(n_parts, MAXSIM_IVF_CENTROIDS),
-    )
-
-
-def maxsim_index_delete(
-    spark: SparkSession, keys: DataFrame, index_dir: str
-) -> int:
-    """Tombstone-delete token vectors from the standing MaxSim index —
-    the family's missing delete verb (round-13 'next round' item #5).
-    ``keys``: any frame with a vec_id column (delete a whole document by
-    offering its MAXSIM_GROUP token ids). A feed carrying the cell
-    prunes directly (cross-checked); a bare-key feed goes through the
-    persisted key→partition map when present, else the slim full key
-    scan — the shared delete_keys contract."""
-    from bert_etl_spark.operators.index_lifecycle import (
-        delete_keys,
-        delete_keys_by_map,
-    )
-
-    if "cell" in keys.columns:
-        return delete_keys(
-            spark, index_dir, _MAXSIM_MARKER, MAXSIM_IVF_CENTROIDS, keys,
-            part_col="cell",
-        )
-    return delete_keys_by_map(
-        spark, index_dir, _MAXSIM_MARKER, MAXSIM_IVF_CENTROIDS, keys,
-        part_col="cell",
-    )
-
-
-def maxsim_index_stream(
-    stream: DataFrame,
-    index_dir: str,
-    checkpoint_dir: str,
-    compact_every: int = 0,
-    compact_when_tombstones_over: int = 0,
-):
-    """Always-on ingest of arriving multi-vector documents into the
-    standing durable MaxSim index: ``readStream`` of (vec_id, embedding)
-    → foreachBatch → maxsim_index_ingest per micro-batch. The streaming
-    sibling of the LSH band ledger (streaming/events.py) for the
-    similarity family. ``compact_when_tombstones_over=B``: compact on
-    measured pending tombstone bytes (compaction_due), alongside the
-    ``compact_every=N`` epoch cadence.
-
-    Exactly-once WITHOUT epoch bookkeeping: foreachBatch is
-    at-least-once, but ingest's anti-join against the index's vec_id
-    column makes a replayed or re-delivered batch a measured NO-OP (the
-    test pins it), so the sink is idempotent by construction — the same
-    property the ledger buys with epoch=<id> overwrite partitions, here
-    free because the index is keyed by content id rather than
-    accumulating per-epoch emissions. Returns the StreamingQuery; callers
-    await it (availableNow trigger: drain-and-stop, the batch-parity
-    harness shape).
-    """
-    spark = stream.sparkSession
-
-    def _ingest(batch_df: DataFrame, epoch_id: int) -> None:
-        from bert_etl_spark.operators.index_lifecycle import compaction_due
-
-        maxsim_index_ingest(spark, batch_df, index_dir)
-        if compaction_due(
-            spark, index_dir, epoch_id, compact_every,
-            compact_when_tombstones_over,
-        ):
-            maxsim_index_compact(spark, index_dir)
-
-    return (
-        stream.writeStream.foreachBatch(_ingest)
-        .option("checkpointLocation", checkpoint_dir)
-        .trigger(availableNow=True)
-        .start()
-    )
+MAXSIM_FAMILY = IndexFamily(
+    name="MaxSim index",
+    unit="centroids",
+    marker=_MAXSIM_MARKER,
+    layout=MAXSIM_IVF_CENTROIDS,
+    part_col="cell",
+    part_cap=MAXSIM_IVF_CENTROIDS,
+    assign=_maxsim_rows,
+    keymap=True,
+)
+maxsim_index_ingest = MAXSIM_FAMILY.ingest
+maxsim_index_upsert = MAXSIM_FAMILY.upsert
+maxsim_index_delete = MAXSIM_FAMILY.delete
+maxsim_index_compact = MAXSIM_FAMILY.compact
+maxsim_index_stream = MAXSIM_FAMILY.stream
 
 
 # New-arrival split: the MAXSIM_INCR_DOCS HIGHEST doc ids arrive "new".
@@ -4853,7 +4030,7 @@ def sim_maxsim_incremental(spark: SparkSession, sf_dir: str) -> DataFrame:
     thr = int(max_vec) // MAXSIM_GROUP - (MAXSIM_INCR_DOCS - 1)
     is_new = F.col("doc") >= thr
     corpus_assign = assign.filter(~is_new)
-    if _maxsim_index_dir(spark):
+    if spark.conf.get(MAXSIM_INDEX_DIR_CONF, None):
         # durable-index reads arrive as ~1 scan split per 128 MB (64 small
         # cell files coalesce to 1-2 partitions locally), which serializes
         # the rerank's O(batch x candidates x G^2) cosine work on one core
@@ -4887,7 +4064,7 @@ def sim_maxsim_incremental(spark: SparkSession, sf_dir: str) -> DataFrame:
     # session-lifetime blocks stream through the cell join as before
     cand_side = _maxsim_cells_scan(
         spark, sf_dir, corpus_assign, _probed_cells(probes)
-        if _maxsim_index_dir(spark)
+        if spark.conf.get(MAXSIM_INDEX_DIR_CONF, None)
         else []
     )
     if cand_side is not corpus_assign:
@@ -4986,7 +4163,7 @@ def streaming_maxsim_scoring(spark: SparkSession, sf_dir: str) -> DataFrame:
     thr = int(max_vec) // MAXSIM_GROUP - (MAXSIM_INCR_DOCS - 1)
     is_new = F.col("doc") >= thr
     corpus_assign = assign.filter(~is_new)
-    if _maxsim_index_dir(spark):
+    if spark.conf.get(MAXSIM_INDEX_DIR_CONF, None):
         from bert_etl_spark.operators.registry import spread
 
         corpus_assign = spread(corpus_assign)
@@ -5023,7 +4200,11 @@ def streaming_maxsim_scoring(spark: SparkSession, sf_dir: str) -> DataFrame:
             spark,
             sf_dir,
             corpus_assign,
-            _probed_cells(probes) if _maxsim_index_dir(spark) else [],
+            (
+                _probed_cells(probes)
+                if spark.conf.get(MAXSIM_INDEX_DIR_CONF, None)
+                else []
+            ),
         )
         if cand_side is not corpus_assign:
             cand_side = cand_side.filter(~is_new)
@@ -5123,7 +4304,7 @@ def streaming_maxsim_scoring(spark: SparkSession, sf_dir: str) -> DataFrame:
 )
 def sim_ivf_filtered(spark: SparkSession, sf_dir: str) -> DataFrame:
     assign = _ivf_assign(spark, sf_dir)
-    index_dir = _ivf_index_dir(spark)
+    index_dir = spark.conf.get(IVF_INDEX_DIR_CONF, None)
     cent = _codebook_frame(spark, index_dir) if index_dir else None
     if cent is None:
         cent = _ivf_centroids(spark, sf_dir)
@@ -5414,7 +4595,7 @@ def sim_hybrid_rrf_indexed(spark: SparkSession, sf_dir: str) -> DataFrame:
 
     from bert_etl_spark.functions.scratch import session_scratch_dir
 
-    ivf_dir = _ivf_index_dir(spark)
+    ivf_dir = spark.conf.get(IVF_INDEX_DIR_CONF, None)
     tix_dir = None
     try:
         tix_dir = spark.conf.get(_TIX_CONF, None)
@@ -5807,7 +4988,7 @@ def sim_mmr_batch_indexed(spark: SparkSession, sf_dir: str) -> DataFrame:
             schema="q_id long, id long, mmr_rank int, mmr_score double",
         )
 
-    index_dir = _ivfpq_index_dir(spark)
+    index_dir = spark.conf.get(IVFPQ_INDEX_DIR_CONF, None)
     if index_dir:
         ivfpq_build_or_open(spark, sf_dir, index_dir)
         return _diversify(index_dir)

@@ -21,7 +21,10 @@ from pyspark.sql import functions as F
 
 from bert_etl_spark.functions.deterministic import dsum, sql_dsum
 from bert_etl_spark.functions.localdf import local_frame
-from bert_etl_spark.operators.index_lifecycle import read_with_cached_schema
+from bert_etl_spark.operators.index_lifecycle import (
+    IndexFamily,
+    read_with_cached_schema,
+)
 from bert_etl_spark.operators.dedup import shingles_df, tokenize
 from bert_etl_spark.operators.registry import persist_once, query, spread, tbl
 
@@ -1191,7 +1194,7 @@ def bm25_scores(spark: SparkSession, sf_dir: str) -> DataFrame:
     ``spark.bert_etl.textidx.indexDir`` set, scores come off the durable
     posting index (path-pruned probe, zero corpus access — see
     bm25_scores_indexed below); otherwise one corpus pass."""
-    index_dir = _textidx_dir(spark)
+    index_dir = spark.conf.get(TEXTIDX_DIR_CONF, None)
     if index_dir:
         return bm25_scores_indexed(spark, sf_dir, index_dir)
     docs = tbl(spark, sf_dir, "documents")
@@ -1303,13 +1306,6 @@ def _textidx_legacy_check(spark: SparkSession, index_dir: str) -> None:
             )
 
 
-def _textidx_dir(spark: SparkSession) -> str | None:
-    try:
-        return spark.conf.get(TEXTIDX_DIR_CONF, None)
-    except Exception:
-        return None
-
-
 def _token_bucket(col: F.Column | str):
     c = F.col(col) if isinstance(col, str) else col
     return F.pmod(F.xxhash64(c), F.lit(TEXTIDX_BUCKETS)).cast("int")
@@ -1390,172 +1386,65 @@ def read_collection_stats(spark: SparkSession, index_dir: str) -> DataFrame:
     return spark.read.parquet(f"{index_dir}/{_STATS_DIR}/*.parquet")
 
 
+def _refresh_stats(spark: SparkSession, tmp_dir: str) -> None:
+    """compact's ``finalize_tmp``: stats from the POST-tombstone rewrite
+    the swap is about to commit — one distinct-doc aggregate over the
+    slim (doc_id, dl) projection of the tmp table, staged inside it so
+    stats and data commit under the same sentinel or not at all."""
+    table = spark.read.option("basePath", tmp_dir).parquet(tmp_dir)
+    stats = table.select("doc_id", "dl").distinct().agg(
+        F.count("*").alias("n_docs"),
+        (F.sum("dl").cast("double") / F.count("*")).alias("avgdl"),
+    )
+    stats.coalesce(1).write.mode("overwrite").parquet(
+        f"{tmp_dir}/{_STATS_DIR}"
+    )
+
+
+# The inverted index through the generic verbs: a document (doc_id) owns
+# many posting rows across token buckets (multi_rows), ingest dedups on
+# the posting key pkey = token|doc, and upsert/delete/compact act on
+# whole documents. Collection stats stay FROZEN at build (the _codebook
+# contract: new docs score with build-time idf/avgdl) until a compact
+# with refresh_stats=True recomputes them from the postings it rewrites
+# — the staleness cure for an ingest-heavy index; scores after a
+# refresh-compact equal a fresh full build's.
+TEXTIDX_FAMILY = IndexFamily(
+    name="text index",
+    unit="buckets",
+    marker=_TEXTIDX_MARKER,
+    layout=TEXTIDX_BUCKETS,
+    part_col="bucket",
+    part_cap=TEXTIDX_BUCKETS,
+    assign=lambda spark, docs, index_dir: _postings_plan(docs),
+    key="doc_id",
+    pkey="pkey",
+    multi_rows=True,
+    before=_textidx_legacy_check,
+)
+
+
 def _textidx_open_or_build(
     spark: SparkSession, sf_dir: str, index_dir: str
 ) -> None:
-    from bert_etl_spark.operators.index_lifecycle import build_index, open_index
-
-    _textidx_legacy_check(spark, index_dir)
-    marker = open_index(spark, index_dir, _TEXTIDX_MARKER, "bucket")
-    if marker is not None and marker != TEXTIDX_BUCKETS:
-        raise ValueError(
-            f"text index at {index_dir} was built with {marker} buckets "
-            f"but this build hashes into {TEXTIDX_BUCKETS} — the bucket "
-            "modulus is a persistent layout property; point the conf at a "
-            "fresh dir or delete the stale index"
-        )
-    if marker is None:
-        n_parts = int(
-            spark.conf.get("spark.sql.shuffle.partitions", "32") or "32"
-        )
-        build_index(
-            spark,
-            index_dir,
-            _TEXTIDX_MARKER,
-            TEXTIDX_BUCKETS,
-            _postings_plan(tbl(spark, sf_dir, "documents")),
-            "bucket",
-            min(n_parts, TEXTIDX_BUCKETS),
-            finalize=lambda: _write_collection_stats(spark, index_dir),
-        )
-
-
-def textidx_ingest(
-    spark: SparkSession, batch_docs: DataFrame, index_dir: str
-) -> int:
-    """Append NEW documents' postings into the standing text index —
-    idempotent on pkey (re-delivered docs re-offer identical posting
-    rows; the anti-join drops them). Collection statistics stay FROZEN at
-    build time (the _codebook contract): new docs are scored with
-    build-time idf/avgdl until a rebuild. ``batch_docs``: (doc_id, text).
-    Validates via open_index so a textidx_stream(compact_every=N) epoch
-    replayed after a crash inside the compaction sentinel window finishes
-    the interrupted swap instead of refusing (round-12 advice — the same
-    recovery the dense families' ingest verbs already run)."""
-    from bert_etl_spark.operators.index_lifecycle import ingest_rows, open_index
-
-    _textidx_legacy_check(spark, index_dir)
-    if open_index(spark, index_dir, _TEXTIDX_MARKER, "bucket") is None:
-        raise ValueError(
-            f"no standing text index at {index_dir} — build it first"
-        )
-    n_parts = int(
-        spark.conf.get("spark.sql.shuffle.partitions", "32") or "32"
-    )
-    return ingest_rows(
+    TEXTIDX_FAMILY.open_or_build(
         spark,
         index_dir,
-        _TEXTIDX_MARKER,
-        TEXTIDX_BUCKETS,
-        _postings_plan(batch_docs),
-        "bucket",
-        min(n_parts, TEXTIDX_BUCKETS),
-        key="pkey",
+        lambda: _postings_plan(tbl(spark, sf_dir, "documents")),
+        finalize=lambda: _write_collection_stats(spark, index_dir),
     )
 
 
-def textidx_upsert(
-    spark: SparkSession, docs: DataFrame, index_dir: str
-) -> tuple[int, int]:
-    """Re-ingest CHANGED documents atomically — the multi-row form of
-    the keyed upsert (upsert_rows, multi_rows=True): a document's OLD
-    postings, across every token bucket they occupy, are replaced by
-    the new text's postings in ONE partial swap; fresh doc_ids insert;
-    a tombstoned doc resurrects atomically (the filtered ``_tombstones``
-    swaps as an artifact). This closes the text index's update gap: a
-    changed document previously needed delete → full compact →
-    re-ingest, with the doc invisible in between. Touched buckets =
-    (buckets holding the doc's old postings, from the slim
-    doc_id+bucket scan) ∪ (the new postings' buckets) — bounded by the
-    batch's token diversity, not the index. Collection stats stay
-    FROZEN (the _codebook contract; refresh at the fold via
-    textidx_compact(refresh_stats=True)). ``docs``: (doc_id, text).
-    Returns (n_docs_replaced, n_docs_inserted)."""
-    from bert_etl_spark.operators.index_lifecycle import open_index, upsert_rows
-
-    _textidx_legacy_check(spark, index_dir)
-    if open_index(spark, index_dir, _TEXTIDX_MARKER, "bucket") is None:
-        raise ValueError(
-            f"no standing text index at {index_dir} — build it first"
-        )
-    n_parts = int(
-        spark.conf.get("spark.sql.shuffle.partitions", "32") or "32"
-    )
-    return upsert_rows(
-        spark,
-        index_dir,
-        _TEXTIDX_MARKER,
-        TEXTIDX_BUCKETS,
-        _postings_plan(docs),
-        "bucket",
-        min(n_parts, TEXTIDX_BUCKETS),
-        key="doc_id",
-        multi_rows=True,
-    )
-
-
-def textidx_delete(
-    spark: SparkSession, doc_keys: DataFrame, index_dir: str
-) -> int:
-    """Tombstone whole documents out of the text index (one tombstone per
-    doc_id masks every posting of the doc; compaction drops them
-    physically). ``doc_keys``: any frame with a doc_id column."""
-    from bert_etl_spark.operators.index_lifecycle import delete_keys
-
-    _textidx_legacy_check(spark, index_dir)
-    return delete_keys(
-        spark, index_dir, _TEXTIDX_MARKER, TEXTIDX_BUCKETS, doc_keys,
-        key="doc_id",
-    )
+textidx_ingest = TEXTIDX_FAMILY.ingest
+textidx_upsert = TEXTIDX_FAMILY.upsert
+textidx_delete = TEXTIDX_FAMILY.delete
 
 
 def textidx_compact(
     spark: SparkSession, index_dir: str, refresh_stats: bool = False
 ) -> int:
-    """Compact the posting table to one file per bucket, applying pending
-    doc tombstones — the shared crash-safe protocol.
-
-    ``refresh_stats=True`` also RECOMPUTES the frozen collection
-    statistics (n_docs, avgdl — the BM25 idf/avgdl inputs stamped at
-    build) from the postings this compaction is already rewriting, and
-    swaps them in under the SAME ``_compact_pending`` sentinel as the
-    data (staged inside the tmp table; finish_compaction_swap moves
-    artifact dirs) — stats refresh and rewrite commit together or not at
-    all. This is the staleness cure for an ingest-heavy index whose
-    scores drift away from a fresh build (round-13 'next round' item #2):
-    the fold is the natural refresh point, mirroring the CDC design —
-    scores computed after a refresh-compact equal a fresh full-corpus
-    build's exactly (tests pin that). Default False keeps the documented
-    frozen-stats contract for callers that want build-time
-    reproducibility."""
-    from bert_etl_spark.operators.index_lifecycle import compact_index
-
-    _textidx_legacy_check(spark, index_dir)
-    n_parts = int(
-        spark.conf.get("spark.sql.shuffle.partitions", "32") or "32"
-    )
-
-    def _refresh(tmp_dir: str) -> None:
-        # stats from the POST-tombstone rewrite the swap is about to
-        # commit — one distinct-doc aggregate over the slim (doc_id, dl)
-        # projection of the tmp table
-        table = spark.read.option("basePath", tmp_dir).parquet(tmp_dir)
-        stats = table.select("doc_id", "dl").distinct().agg(
-            F.count("*").alias("n_docs"),
-            (F.sum("dl").cast("double") / F.count("*")).alias("avgdl"),
-        )
-        stats.coalesce(1).write.mode("overwrite").parquet(
-            f"{tmp_dir}/{_STATS_DIR}"
-        )
-
-    return compact_index(
-        spark,
-        index_dir,
-        _TEXTIDX_MARKER,
-        "bucket",
-        min(n_parts, TEXTIDX_BUCKETS),
-        key="doc_id",
-        finalize_tmp=_refresh if refresh_stats else None,
+    return TEXTIDX_FAMILY.compact(
+        spark, index_dir, _refresh_stats if refresh_stats else None
     )
 
 
@@ -1660,27 +1549,18 @@ def text_bm25_indexed(spark: SparkSession, sf_dir: str) -> DataFrame:
 def text_bm25_indexed_refreshed(spark: SparkSession, sf_dir: str) -> DataFrame:
     from bert_etl_spark.functions.scratch import session_scratch_dir
     from bert_etl_spark.operators.global_order import rank_bounded
-    from bert_etl_spark.operators.index_lifecycle import build_index, open_index
 
     # a DEDICATED scratch replica (this query MUTATES its index via
     # ingest + compact — never the shared textidx_demo dir, the
     # sim_ivfpq_recall_drift isolation rule)
     index_dir = session_scratch_dir(spark, "textidx_refresh", sf_dir)
     docs = tbl(spark, sf_dir, "documents")
-    if open_index(spark, index_dir, _TEXTIDX_MARKER, "bucket") is None:
-        n_parts = int(
-            spark.conf.get("spark.sql.shuffle.partitions", "32") or "32"
-        )
-        build_index(
-            spark,
-            index_dir,
-            _TEXTIDX_MARKER,
-            TEXTIDX_BUCKETS,
-            _postings_plan(docs.filter(F.col("doc_id") % 2 == 0)),
-            "bucket",
-            min(n_parts, TEXTIDX_BUCKETS),
-            finalize=lambda: _write_collection_stats(spark, index_dir),
-        )
+    TEXTIDX_FAMILY.open_or_build(
+        spark,
+        index_dir,
+        lambda: _postings_plan(docs.filter(F.col("doc_id") % 2 == 0)),
+        finalize=lambda: _write_collection_stats(spark, index_dir),
+    )
     # grow the corpus past the frozen stats, then refresh at the fold.
     # Re-runs are no-ops end to end: the ingest anti-join drops every
     # re-offered posting and the refresh recomputes identical stats.
@@ -1765,37 +1645,10 @@ def textidx_stream(
     compact_when_tombstones_over: int = 0,
     refresh_stats_on_compact: bool = False,
 ):
-    """Always-on document ingest into the standing text index
-    (foreachBatch → textidx_ingest) — verb parity with the dense
-    families' *_stream siblings. Exactly-once at the sink via the pkey
-    anti-join (a re-delivered document re-offers identical posting rows,
-    all dropped). ``compact_every=N``: in-path compaction on every Nth
-    epoch (0 = external cadence); ``compact_when_tombstones_over=B``:
-    compact on measured pending tombstone bytes (compaction_due).
-    ``refresh_stats_on_compact=True``: every in-path compaction also
-    recomputes the frozen collection stats from the postings it rewrites
-    (textidx_compact's refresh — the always-on cure for BM25 staleness
-    under ingest; the fold is the natural refresh point).
-    ``stream``: rows (doc_id, text)."""
-    from bert_etl_spark.operators.index_lifecycle import compaction_due
-
-    spark = stream.sparkSession
-
-    def _ingest(batch_df: DataFrame, epoch_id: int) -> None:
-        textidx_ingest(spark, batch_df, index_dir)
-        if compaction_due(
-            spark, index_dir, epoch_id, compact_every,
-            compact_when_tombstones_over,
-        ):
-            textidx_compact(
-                spark, index_dir, refresh_stats=refresh_stats_on_compact
-            )
-
-    return (
-        stream.writeStream.foreachBatch(_ingest)
-        .option("checkpointLocation", checkpoint_dir)
-        .trigger(availableNow=True)
-        .start()
+    return TEXTIDX_FAMILY.stream(
+        stream, index_dir, checkpoint_dir, compact_every,
+        compact_when_tombstones_over,
+        _refresh_stats if refresh_stats_on_compact else None,
     )
 
 
@@ -2014,7 +1867,7 @@ def _phrase_count_indexed(n_terms: int) -> F.Column:
 def text_phrase_search_indexed(spark: SparkSession, sf_dir: str) -> DataFrame:
     from bert_etl_spark.functions.scratch import session_scratch_dir
 
-    index_dir = _textidx_dir(spark) or session_scratch_dir(
+    index_dir = spark.conf.get(TEXTIDX_DIR_CONF, None) or session_scratch_dir(
         spark, "textidx_demo", sf_dir
     )
     pp = _positional_postings(spark, sf_dir, index_dir, PHRASE_TERMS)
@@ -2047,7 +1900,7 @@ def text_proximity_search_indexed(
 ) -> DataFrame:
     from bert_etl_spark.functions.scratch import session_scratch_dir
 
-    index_dir = _textidx_dir(spark) or session_scratch_dir(
+    index_dir = spark.conf.get(TEXTIDX_DIR_CONF, None) or session_scratch_dir(
         spark, "textidx_demo", sf_dir
     )
     pp = _positional_postings(spark, sf_dir, index_dir, PHRASE_TERMS)
@@ -2099,7 +1952,7 @@ def text_phrase3_search_indexed(
 ) -> DataFrame:
     from bert_etl_spark.functions.scratch import session_scratch_dir
 
-    index_dir = _textidx_dir(spark) or session_scratch_dir(
+    index_dir = spark.conf.get(TEXTIDX_DIR_CONF, None) or session_scratch_dir(
         spark, "textidx_demo", sf_dir
     )
     pp = _positional_postings(spark, sf_dir, index_dir, PHRASE3_TERMS)

@@ -21,6 +21,26 @@ import os
 
 from pyspark.sql import SparkSession
 
+_DRIVER_MEM_CAP_GB = 48
+
+
+def default_driver_memory(phys_bytes: int | None = None) -> str:
+    """Heap default for the single local JVM: half of physical memory,
+    capped at 48g — the heap plus the JVM's off-heap and Python workers
+    must fit the machine, or the kernel OOM-kills the driver.
+    ``SPARK_GRAFT_DRIVER_MEM`` overrides. ``phys_bytes`` defaults to
+    this machine's physical memory (``os.sysconf``); when that is not
+    readable the cap is used."""
+    if phys_bytes is None:
+        try:
+            phys_bytes = os.sysconf("SC_PAGE_SIZE") * os.sysconf("SC_PHYS_PAGES")
+        except (ValueError, OSError, AttributeError):
+            phys_bytes = 0
+    if phys_bytes <= 0:
+        return f"{_DRIVER_MEM_CAP_GB}g"
+    half_mb = phys_bytes // 2 // (1024 * 1024)
+    return f"{min(half_mb, _DRIVER_MEM_CAP_GB * 1024)}m"
+
 # Confs that matter at 100 TB, with values that also behave at test scale.
 _BASE_CONFS: dict[str, str] = {
     # --- correctness / determinism ---
@@ -45,8 +65,11 @@ _BASE_CONFS: dict[str, str] = {
     # per-row work wants cores, and extra sub-64k tasks are noise there.
     "spark.sql.adaptive.coalescePartitions.minPartitionSize": "64k",
     # --- memory: local mode is driver-only, so this is THE heap knob;
-    #     the 1g default causes GC thrash on any real workload ---
-    "spark.driver.memory": os.environ.get("SPARK_GRAFT_DRIVER_MEM", "48g"),
+    #     the 1g default causes GC thrash on any real workload, and a
+    #     heap sized past the machine gets the JVM OOM-killed ---
+    "spark.driver.memory": os.environ.get(
+        "SPARK_GRAFT_DRIVER_MEM", default_driver_memory()
+    ),
     "spark.driver.maxResultSize": "4g",
     # --- shuffle ---
     "spark.sql.shuffle.partitions": os.environ.get("SPARK_GRAFT_SHUFFLE", "32"),

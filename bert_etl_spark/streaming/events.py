@@ -1250,6 +1250,7 @@ def cdc_compact_state(spark: SparkSession, state_dir: str) -> int:
         bucket_layout,
         finish_compaction_swap,
         open_index,
+        shuffle_parts,
     )
 
     nb = open_index(spark, state_dir, CDC_MARKER, "bkt")
@@ -1260,9 +1261,7 @@ def cdc_compact_state(spark: SparkSession, state_dir: str) -> int:
         return 0  # stamped-but-empty state: nothing to fold
     folded = _cdc_argmax(log).withColumn("bkt", _cdc_bucket(nb))
     tmp = f"{state_dir}{TMP_SUFFIX}"
-    n_parts = int(
-        spark.conf.get("spark.sql.shuffle.partitions", "32") or "32"
-    )
+    n_parts = shuffle_parts(spark)
     # the folded row count rides the tmp write as an observed metric —
     # previously a full read-back count of the files just written
     # (round-14 batch 4; reliable_metrics scope per functions/observe.py)
@@ -1339,6 +1338,7 @@ def cdc_rebucket(spark: SparkSession, state_dir: str, new_n_buckets: int) -> int
         bucket_layout,
         finish_compaction_swap,
         open_index,
+        shuffle_parts,
     )
 
     new_nb = int(new_n_buckets)
@@ -1355,9 +1355,7 @@ def cdc_rebucket(spark: SparkSession, state_dir: str, new_n_buckets: int) -> int
         return 0
     folded = _cdc_argmax(log).withColumn("bkt", _cdc_bucket(new_nb))
     tmp = f"{state_dir}{TMP_SUFFIX}"
-    n_parts = int(
-        spark.conf.get("spark.sql.shuffle.partitions", "32") or "32"
-    )
+    n_parts = shuffle_parts(spark)
     # migrated row count via observed metric on the tmp write — the
     # cdc_compact_state shape (round-14 batch 4)
     from pyspark.sql import Observation
@@ -1416,12 +1414,11 @@ def cdc_apply_stream(
     from bert_etl_spark.operators.index_lifecycle import (
         ingest_rows,
         open_index,
+        shuffle_parts,
     )
 
     spark = stream.sparkSession
-    n_parts = int(
-        spark.conf.get("spark.sql.shuffle.partitions", "32") or "32"
-    )
+    n_parts = shuffle_parts(spark)
 
     # The apply epoch's plans are BATCH-BOUNDED by construction (opkey
     # dedup of one micro-batch, broadcast semi/anti against the touched
@@ -1541,11 +1538,8 @@ def cdc_index_sync(
     spark: SparkSession,
     state_dir: str,
     index_dir: str,
-    upsert,
-    delete,
-    key_out: str = "vec_id",
+    family,
     payload_cols: tuple = ("embedding",),
-    upsert_delete=None,
 ) -> tuple[int, int, int]:
     """Converge a durable index onto the CDC-maintained corpus — the
     end-to-end composition the two subsystems exist for: the op log is
@@ -1554,34 +1548,22 @@ def cdc_index_sync(
     etl/__init__.py:86-164), and the index families are its derived
     search structures. Each sync reads the per-key argmax view
     (latest_cdc_state), keeps only keys whose FINAL op is newer than the
-    index's ``_synced_seq`` watermark, routes op='D' keys to the
-    family's ``delete`` verb and the rest to its ``upsert`` verb
-    (keyed in-place replace-or-insert — updates re-embed in place,
-    resurrections ride the tombstone-artifact swap), then advances the
-    watermark. Returns ``(n_deleted, n_replaced, n_inserted)``.
+    index's ``_synced_seq`` watermark, and lands the whole delta through
+    ``family`` (an index_lifecycle.IndexFamily) in ONE upsert_delete
+    swap: op='D' keys are deleted, the rest replace-or-insert on
+    ``family.key`` (updates re-embed in place, resurrections ride the
+    tombstone-artifact swap). Then it advances the watermark. Returns
+    ``(n_deleted, n_replaced, n_inserted)``.
 
     Convergence under crashes, at-least-once: the watermark is written
-    AFTER both verbs commit, so a crash replays a SUPERSET of the delta
-    — both verbs are idempotent (delete skips tombstoned/absent keys;
-    upsert is a deterministic rewrite), so the replayed sync lands the
-    identical end state. Delete-then-upsert order is safe because the
-    argmax view yields exactly one final op per key — the two key sets
-    are disjoint. Write cost is O(changed keys since last sync), the
+    AFTER the swap commits, so a crash replays a SUPERSET of the delta —
+    the swap is a deterministic rewrite, so the replayed sync lands the
+    identical end state. The argmax view yields exactly one final op per
+    key, so the delete and upsert key sets are disjoint (the combined
+    verb's contract). Write cost is O(changed keys since last sync), the
     CDC apply's own bound carried through to the index; the read is one
     pass of the (fold-bounded) op log. Single-writer against the index,
-    like all maintenance verbs. ``upsert``/``delete`` are the family
-    wrappers partially applied to the index dir, e.g.
-    ``lambda b: ivf_index_upsert(spark, b, idx)``.
-
-    ``upsert_delete`` (optional): the family's COMBINED verb —
-    ``(batch, keys) -> (n_deleted, n_replaced, n_inserted)`` wrapping
-    index_lifecycle.upsert_delete_rows — which lands both key sets in
-    ONE touched-partition rewrite and sentinel swap instead of two
-    sequential verbs (half the per-sync machinery: one batch
-    checkpoint, one slim locate scan, one tmp rewrite — round-15).
-    Same end state by the combined verb's contract (the argmax delta's
-    key sets are disjoint); ``upsert``/``delete`` stay as the
-    sequential fallback for families without a combined wrapper."""
+    like all maintenance verbs."""
     from bert_etl_spark.functions.markers import read_int_marker, write_int_marker
     from bert_etl_spark.functions.release import release
 
@@ -1607,16 +1589,12 @@ def cdc_index_sync(
         if mx is None:
             return (0, 0, 0)
         dels = delta.filter(F.col("op") == "D").select(
-            F.col("k").alias(key_out)
+            F.col("k").alias(family.key)
         )
         ups = delta.filter(F.col("op") != "D").select(
-            F.col("k").alias(key_out), *payload_cols
+            F.col("k").alias(family.key), *payload_cols
         )
-        if upsert_delete is not None:
-            nd, nr, ni = upsert_delete(ups, dels)
-        else:
-            nd = delete(dels)
-            nr, ni = upsert(ups)
+        nd, nr, ni = family.upsert_delete(spark, ups, dels, index_dir)
         write_int_marker(spark, f"{index_dir}/{CDC_SYNCED_SEQ}", int(mx))
         return (int(nd), int(nr), int(ni))
     finally:

@@ -48,3 +48,18 @@ def test_reader_options():
     opts = to_reader_options(conf)
     assert opts["maxFilesPerTrigger"] == 5
     assert opts["trigger_processing_time"] == "30 seconds"
+
+
+def test_driver_memory_default_is_half_of_physical_capped():
+    """The local driver heap defaults to half of physical memory, capped
+    at 48g; unreadable memory falls back to the cap."""
+    from bert_etl_spark.session import default_driver_memory
+
+    gib = 1024**3
+    assert default_driver_memory(16 * gib) == "8192m"
+    assert default_driver_memory(15 * gib) == "7680m"
+    assert default_driver_memory(96 * gib) == "49152m"
+    assert default_driver_memory(512 * gib) == "49152m"
+    assert default_driver_memory(0) == "48g"
+    phys = default_driver_memory()
+    assert phys.endswith(("m", "g")) and int(phys[:-1]) > 0

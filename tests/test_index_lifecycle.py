@@ -3017,3 +3017,66 @@ def test_schema_memo_caches_and_invalidates_on_rewrite(spark, tmp_path):
     df3 = life.read_with_cached_schema(spark, idx, [idx], base_path=idx)
     assert {f.name for f in df3.schema} == {f.name for f in df1.schema}
     assert df3.count() == n1
+
+
+def test_ingest_into_partition_drained_by_upsert_delete(spark, tmp_path):
+    """A combined upsert+delete that drops every key of a partition swaps
+    in an EMPTY dir for it. The next verb touching only that partition
+    must read it as "no standing rows", not infer a schema over a dir
+    with no data file (UNABLE_TO_INFER_SCHEMA once the rewrite's commit
+    dropped the schema memo)."""
+    idx = str(tmp_path / "drained")
+    rows = spark.createDataFrame(
+        [(1, 0), (2, 0), (3, 1), (4, 1)], "vec_id long, cell int"
+    )
+    life.build_index(spark, idx, "_n_cells", 2, rows, "cell", 2)
+    drop = spark.createDataFrame([(3,), (4,)], "vec_id long")
+    assert life.upsert_delete_rows(
+        spark, idx, "_n_cells", 2, rows.limit(0), drop, "cell", 2
+    ) == (2, 0, 0)
+    assert os.path.isdir(f"{idx}/cell=1")
+    assert life.physical_pruned_scan(spark, idx, "cell", [1]) is None
+    arrival = spark.createDataFrame([(5, 1)], "vec_id long, cell int")
+    assert life.ingest_rows(spark, idx, "_n_cells", 2, arrival, "cell", 2) == 1
+    assert life.ingest_rows(spark, idx, "_n_cells", 2, arrival, "cell", 2) == 0
+    got = sorted(
+        (r.vec_id, r.cell)
+        for r in spark.read.option("basePath", idx).parquet(idx).collect()
+    )
+    assert got == [(1, 0), (2, 0), (5, 1)]
+
+
+def test_graph_ingest_finishes_crashed_compact(spark, tmp_path, monkeypatch):
+    """A crash inside graph_edges_compact's sentinel window (tmp written,
+    sentinel stamped, marker deleted) must not strand the edge table:
+    the next graph_edges_ingest finishes the swap through open_index and
+    then ingests."""
+    from bert_etl_spark.operators import advanced as adv
+
+    edir = str(tmp_path / "edges_crash")
+    adv.graph_edges_build_or_open(spark, SF, edir)
+    total = spark.read.option("basePath", edir).parquet(edir).count()
+    first = spark.createDataFrame([(920001, 920002)], "u long, v long")
+    assert adv.graph_edges_ingest(spark, first, edir) == 1
+
+    def boom(*a, **kw):
+        raise RuntimeError("simulated crash mid-swap")
+
+    monkeypatch.setattr(life, "finish_compaction_swap", boom)
+    with pytest.raises(RuntimeError, match="simulated crash"):
+        adv.graph_edges_compact(spark, edir)
+    monkeypatch.undo()
+    assert read_int_marker(spark, f"{edir}/{life.PENDING_SENTINEL}") is not None
+    assert read_int_marker(spark, f"{edir}/{adv._EDGE_MARKER}") is None
+    more = spark.createDataFrame(
+        [(920001, 920002), (920003, 920004)], "u long, v long"
+    )
+    assert adv.graph_edges_ingest(spark, more, edir) == 1
+    assert (
+        read_int_marker(spark, f"{edir}/{adv._EDGE_MARKER}")
+        == adv.GRAPH_EDGE_BUCKETS
+    )
+    assert not os.path.exists(f"{edir}{life.TMP_SUFFIX}")
+    table = spark.read.option("basePath", edir).parquet(edir)
+    assert table.count() == total + 2
+    assert table.dropDuplicates(["pkey"]).count() == total + 2

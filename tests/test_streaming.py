@@ -1717,12 +1717,9 @@ def test_cdc_index_sync_watermark_and_replay(spark, tmp_path):
             str(tmp_path / f"ck_{name}"),
         ).awaitTermination()
 
-    up = lambda b: sim.ivf_index_upsert(spark, b, idx)  # noqa: E731
-    de = lambda ks: sim.ivf_index_delete(spark, ks, idx)  # noqa: E731
-
     def sync():
         return ev.cdc_index_sync(
-            spark, state, idx, up, de, payload_cols=("embedding", "label")
+            spark, state, idx, sim.IVF_FAMILY, payload_cols=("embedding", "label")
         )
 
     def live_rows():
@@ -1741,7 +1738,7 @@ def test_cdc_index_sync_watermark_and_replay(spark, tmp_path):
     assert sync() == (0, 0, 0)  # watermark no-op
     # crash before the watermark landed: replay the superset delta
     os.remove(f"{idx}/{ev.CDC_SYNCED_SEQ}")
-    # re-applied delta: the delete is a no-op (40 already tombstoned),
+    # re-applied delta: the delete is a no-op (40 already gone),
     # the upsert a deterministic rewrite...
     assert sync() == (0, 1, 0)
     assert live_rows() == snap1  # ...converging to the identical state

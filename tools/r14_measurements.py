@@ -499,8 +499,7 @@ def main() -> None:
                     spark,
                     f"{work}/state",
                     idx,
-                    lambda b: sim.ivf_index_upsert(spark, b, idx),
-                    lambda ks: sim.ivf_index_delete(spark, ks, idx),
+                    sim.IVF_FAMILY,
                     payload_cols=("embedding", "label"),
                 )
             t0 = time.time()
