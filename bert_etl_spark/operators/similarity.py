@@ -842,9 +842,9 @@ simlsh_index_ingest = SIMLSH_FAMILY.ingest
 def simlsh_index_upsert(
     spark: SparkSession, batch: DataFrame, index_dir: str
 ) -> tuple[int, int]:
-    """SIMLSH_FAMILY.upsert, except that an index migrated to another
-    plane count (simlsh_index_rebuild) is upserted at its STAMPED count
-    instead of refused — the rows re-hash with ``planes_for(stamped)``."""
+    """Keyed upsert (upsert_rows) at the index's STAMPED plane count:
+    the rows hash with ``planes_for(stamped)``, so an index migrated by
+    simlsh_index_rebuild is upserted in its own layout."""
     from bert_etl_spark.operators.index_lifecycle import (
         keymap_enabled,
         open_index,
@@ -852,8 +852,10 @@ def simlsh_index_upsert(
     )
 
     n = open_index(spark, index_dir, _SIMLSH_MARKER, "bucket")
-    if n is None or n == N_PLANES:
-        return SIMLSH_FAMILY.upsert(spark, batch, index_dir)
+    if n is None:
+        raise ValueError(
+            f"no standing {SIMLSH_FAMILY.name} at {index_dir} — build it first"
+        )
     return upsert_rows(
         spark,
         index_dir,
